@@ -9,8 +9,9 @@ byte-identical files:
   every hash replaced by a per-copy digest, so copies never overlap in
   time, index or hash;
 * the api_mix request stream: a closed-loop client's requests, in
-  blocks that hold every endpoint once (seeded order), with skewed
-  account and pair popularity;
+  blocks that hold every endpoint once (seeded order); accounts and
+  pairs are drawn as often as they occur in the fixtures, and each
+  endpoint visits every copy once in every R consecutive blocks;
 * the gate_batch order: one seeded permutation of the gate list per rep.
 """
 
@@ -39,7 +40,6 @@ ENDPOINTS = (
 # window applies, so they have no pristine twin to check against
 STATE_ENDPOINTS = ("balances", "orders")
 CANDLE_INTERVALS = ("1hour", "1day", "1month")
-ZIPF_S = 1.1
 
 
 def compact(obj):
@@ -141,7 +141,7 @@ def amount_leg(a):
 
 
 def popularity(fixtures):
-    """Accounts and currency pairs by descending fixture frequency."""
+    """{account: count} and {currency pair: count} over the fixtures."""
     acc, pairs = {}, {}
     for l in fixtures:
         for tx in l.get("transactions", []):
@@ -152,13 +152,13 @@ def popularity(fixtures):
                 p = (amount_leg(tx["TakerGets"]), amount_leg(tx["TakerPays"]))
                 if p[0] != p[1]:
                     pairs[p] = pairs.get(p, 0) + 1
-    rank = lambda d: [k for k, _ in sorted(d.items(), key=lambda kv: (-kv[1], str(kv[0])))]
-    return rank(acc), rank(pairs)
+    return acc, pairs
 
 
-def zipf_pick(rng, items):
-    weights = [1.0 / (i + 1) ** ZIPF_S for i in range(len(items))]
-    return rng.choices(items, weights=weights, k=1)[0]
+def pick(rng, counts):
+    """A key drawn with probability proportional to its count."""
+    keys = sorted(counts, key=str)
+    return rng.choices(keys, weights=[counts[k] for k in keys], k=1)[0]
 
 
 def leg_json(leg):
@@ -166,20 +166,30 @@ def leg_json(leg):
 
 
 def make_requests(rng, copies, accounts, pairs, n):
-    """n requests in blocks holding every endpoint once, seeded order."""
+    """n requests in blocks holding every endpoint once, seeded order.
+
+    Each endpoint takes its copies from its own deck, a seeded
+    permutation of all copies dealt one per block, so every R
+    consecutive blocks starting at a multiple of R send each windowed
+    endpoint to copy 0 once.
+    """
     out = []
+    decks = {ep: [] for ep in ENDPOINTS if ep not in STATE_ENDPOINTS}
     while len(out) < n:
         block = list(ENDPOINTS)
         rng.shuffle(block)
         for ep in block:
-            cp = rng.choice(copies)
             r = {"ep": ep}
             if ep in STATE_ENDPOINTS:
-                r["account"] = zipf_pick(rng, accounts)
+                r["account"] = pick(rng, accounts)
             else:
+                if not decks[ep]:
+                    decks[ep] = list(copies)
+                    rng.shuffle(decks[ep])
+                cp = decks[ep].pop()
                 r.update(copy=cp["copy"], start=cp["start"], end=cp["end"])
                 if ep in ("exchanges", "candles", "candle_store", "payments"):
-                    base, counter = zipf_pick(rng, pairs)
+                    base, counter = pick(rng, pairs)
                     if ep == "payments":
                         r["currency"] = leg_json(counter)
                     else:
@@ -191,7 +201,7 @@ def make_requests(rng, copies, accounts, pairs, n):
                 elif ep == "tx":
                     r["hash"] = rng.choice(cp["tx_hashes"])
                 else:
-                    r["account"] = zipf_pick(rng, accounts)
+                    r["account"] = pick(rng, accounts)
             out.append(r)
     return out[:n]
 

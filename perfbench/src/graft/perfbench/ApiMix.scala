@@ -3,8 +3,9 @@ package graft.perfbench
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Verify
 import graft.streaming.DaemonStream
@@ -42,7 +43,10 @@ final class ApiMix(spark: SparkSession, tr: Trace, res: Result, inDir: String,
     .fromFile(s"$inDir/requests.jsonl", "UTF-8").getLines().map(l => mapper.readTree(l)).toIndexedSeq
   /** requests per block; each block holds every endpoint once */
   private val block = manifest.get("block").asInt
-  private val executed = scala.collection.mutable.ArrayBuffer.empty[Int]
+  private val issued = warmup + manifest.get("timed_blocks").asInt * block
+  /** The rows served to the first copy-0 request of each windowed
+    * endpoint, by endpoint: (request index, rows, schema). */
+  private val served = scala.collection.mutable.LinkedHashMap.empty[String, (Int, Array[Row], StructType)]
 
   private val store = s"$workDir/store"
   private val daemonDir = s"$workDir/daemon"
@@ -151,12 +155,13 @@ final class ApiMix(spark: SparkSession, tr: Trace, res: Result, inDir: String,
       val planMs = if (traced) Trace.timed(df.queryExecution.executedPlan)._2 else 0.0
       val rows = df.collect()
       val ms = Trace.ms(t0)
+      if (r.has("copy") && r.get("copy").asInt == 0 && !served.contains(ep))
+        served(ep) = (i, rows, df.schema)
       if (timed) {
         res.attempted += 1
         res.items += 1
         res.op(ms, traced)
         res.sample(s"api.$ep.ms", ms)
-        executed += i
         if (rows.isEmpty) res.add("api.empty", 1)
         if (traced) {
           res.sample("api.build_ms", buildMs)
@@ -180,12 +185,11 @@ final class ApiMix(spark: SparkSession, tr: Trace, res: Result, inDir: String,
   /** The closed loop of one client over a fixed number of whole
     * blocks, sized to take about the run's seconds, so every run sends
     * each endpoint equally often. */
-  def run(): Unit =
-    (warmup until warmup + manifest.get("timed_blocks").asInt * block)
-      .foreach(request(_, timed = true))
+  def run(): Unit = (warmup until issued).foreach(request(_, timed = true))
 
-  /** Untimed checks. Copy-0 requests must be digest-equal to the same
-    * request on the pristine fixture tables. Every stored table must
+  /** Untimed checks. The rows served to the first copy-0 request of
+    * every windowed endpoint must be digest-equal to the same request
+    * on the pristine fixture tables. Every stored table must
     * hold R times the fixture's rows. The stats daemon's published
     * table must equal the batch aggregation over the same ledgers. */
   def check(): Unit = {
@@ -194,17 +198,16 @@ final class ApiMix(spark: SparkSession, tr: Trace, res: Result, inDir: String,
     lazy val cascade = Candles.cascade(pristine.exchanges.toDF())
     val src = Source(pristine, () => pristine.exchanges.toDF(), i => cascade(i),
       () => pristine.balanceChanges.toDF(), () => pristine.offers.toDF())
-    val ids = executed.toSeq
-      .filter(i => requests(i).has("copy") && requests(i).get("copy").asInt == 0)
-      .take(manifest.get("checks").asInt)
+    val windowed = requests.take(issued).filter(_.has("copy")).map(str(_, "ep")).distinct
+    windowed.filterNot(served.contains).foreach(ep => res.fail(s"$ep: no copy-0 request served"))
     def digest(df: DataFrame) = Verify.digestOf(df.drop("date"))
-    ids.foreach { i =>
+    served.values.foreach { case (i, rows, schema) =>
       val r = requests(i)
-      val ok = try digest(build(r, replica)) == digest(build(r, src))
+      val ok = try digest(spark.createDataFrame(rows.toSeq.asJava, schema)) == digest(build(r, src))
       catch { case e: Exception => System.err.println(e.getMessage); false }
       if (!ok) res.fail(s"request $i (${str(r, "ep")}): result differs from the pristine fixture tables")
     }
-    res.set("api.checked", ids.length.toDouble)
+    res.set("api.checked", served.size.toDouble)
 
     val copies = manifest.get("copies").size
     val fixture = counts(pristine)

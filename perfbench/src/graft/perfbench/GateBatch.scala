@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 
 import graft.{SparkEntry, Verify}
 
@@ -24,6 +25,12 @@ final class GateBatch(spark: SparkSession, tr: Trace, res: Result, inDir: String
   private val warmReps = manifest.get("warm_reps").asInt
   private val customExecs = Seq("GlobalCumsum", "RangeForwardFill", "TopKPerKey")
   private var evals = 0
+  /** With tracing on, the noop sink's own QueryExecution of each evaluation. */
+  private val writes = if (tr.on) {
+    val l = new LastWrite
+    spark.listenerManager.register(l)
+    Some(l)
+  } else None
 
   private def query(g: String): DataFrame = SparkEntry.queries(g)(spark, data)
   private def sink(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
@@ -48,9 +55,11 @@ final class GateBatch(spark: SparkSession, tr: Trace, res: Result, inDir: String
   }
 
   /** One timed evaluation: construct, plan, run. With tracing on, every
-    * other evaluation also splits its time and counts jobs launched
-    * before the action (eager collects and checkpoints), and every
-    * evaluation's final plan is searched for the custom execs. */
+    * other evaluation also counts jobs launched before the action
+    * (eager collects and checkpoints) and splits its time with the
+    * optimization and planning phases of the sink's own query; every
+    * evaluation's final plan, as the sink ran it, is searched for the
+    * custom execs. */
   private def eval(g: String): Unit = {
     val traced = tr.on && evals % 2 == 0
     evals += 1
@@ -62,22 +71,27 @@ final class GateBatch(spark: SparkSession, tr: Trace, res: Result, inDir: String
       val constructMs = Trace.ms(t0)
       val jobs1 = if (traced) tr.snapshot().getOrElse("jobs", 0L) else 0L
       val t1 = Trace.now()
-      val planMs = if (traced) Trace.timed(df.queryExecution.executedPlan)._2 else 0.0
       sink(df)
       val ms = constructMs + Trace.ms(t1)
       res.items += 1
       res.op(ms, traced)
       res.sample(s"gate.$g.ms", ms)
-      if (traced) {
-        res.add("gate.construct_s", constructMs / 1000)
-        res.add("gate.construct_jobs", (jobs1 - jobs0).toDouble)
-        res.add("gate.plan_s", planMs / 1000)
-        res.add("gate.exec_s", (ms - constructMs - planMs) / 1000)
-      }
-      if (tr.on) {
-        val names = Trace.nodes(Trace.finalPlan(df)).map(_.nodeName)
-        customExecs.filter(x => names.exists(_.contains(x)))
-          .foreach(x => res.set(s"tag.$g.$x", 1))
+      writes.foreach { w =>
+        tr.drain()
+        w.take().foreach { qe =>
+          val names = Trace.nodes(qe.executedPlan).map(_.nodeName)
+          customExecs.filter(x => names.exists(_.contains(x)))
+            .foreach(x => res.set(s"tag.$g.$x", 1))
+          if (traced) {
+            val phases = qe.tracker.phases
+            val planMs = Seq(QueryPlanningTracker.OPTIMIZATION, QueryPlanningTracker.PLANNING)
+              .flatMap(phases.get).map(_.durationMs).sum.toDouble
+            res.add("gate.construct_s", constructMs / 1000)
+            res.add("gate.construct_jobs", (jobs1 - jobs0).toDouble)
+            res.add("gate.plan_s", planMs / 1000)
+            res.add("gate.exec_s", (ms - constructMs - planMs) / 1000)
+          }
+        }
       }
     } catch { case e: Exception => res.fail(s"gate $g: ${e.getMessage}") }
   }

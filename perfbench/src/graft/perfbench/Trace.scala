@@ -1,13 +1,15 @@
 package graft.perfbench
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import scala.collection.mutable
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Scheduler and executor counters, summed from listener events. */
 final class Counters extends SparkListener {
@@ -33,6 +35,18 @@ final class Counters extends SparkListener {
   def snapshot: Map[String, Long] = c.map { case (k, v) => k -> v.get }.toMap
 }
 
+/** The QueryExecution of the last successful data source V2 write,
+  * such as the `noop` sink: the plan the write actually ran, already
+  * final, and the planning phases it spent. */
+final class LastWrite extends QueryExecutionListener {
+  private val last = new AtomicReference[QueryExecution]
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+    if (qe.executedPlan.isInstanceOf[V2TableWriteExec]) last.set(qe)
+  override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+  /** The last write since the previous call, if any. */
+  def take(): Option[QueryExecution] = Option(last.getAndSet(null))
+}
+
 /** Optional tracing: a listener plus span helpers. With tracing off
   * every helper is a plain call and no listener is registered.
   */
@@ -56,7 +70,9 @@ object Trace {
 
   def timed[A](body: => A): (A, Double) = { val t0 = now(); val a = body; (a, ms(t0)) }
 
-  /** The plan as run: the final AQE plan when the query has executed. */
+  /** The plan as run: the final AQE plan of a DataFrame whose own
+    * action (such as `collect`) has run. On one that has not run, AQE
+    * would execute the query stages to get there. */
   def finalPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
     case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
     case p => p

@@ -62,11 +62,32 @@ class SeedTest(TempDirTest):
     def test_every_block_holds_every_endpoint(self):
         rng = __import__("random").Random(3)
         copies = [{"copy": 0, "start": 0, "end": 1, "ledger_indexes": [5], "tx_hashes": ["H"]}]
-        reqs = gen.make_requests(rng, copies, ["rA", "rB"],
-                                 [(("XRP", None), ("USD", "rI"))], 5 * len(gen.ENDPOINTS))
+        reqs = gen.make_requests(rng, copies, {"rA": 2, "rB": 1},
+                                 {(("XRP", None), ("USD", "rI")): 1}, 5 * len(gen.ENDPOINTS))
         for i in range(0, len(reqs), len(gen.ENDPOINTS)):
             block = sorted(r["ep"] for r in reqs[i:i + len(gen.ENDPOINTS)])
             self.assertEqual(block, sorted(gen.ENDPOINTS))
+
+
+    def test_every_copy_per_endpoint_in_r_blocks(self):
+        rng = __import__("random").Random(5)
+        copies = [{"copy": c, "start": c, "end": c, "ledger_indexes": [c], "tx_hashes": [str(c)]}
+                  for c in range(3)]
+        n = len(gen.ENDPOINTS)
+        reqs = gen.make_requests(rng, copies, {"rA": 3, "rB": 1},
+                                 {(("XRP", None), ("USD", "rI")): 1}, 6 * n)
+        for i in range(0, len(reqs), 3 * n):
+            for ep in gen.ENDPOINTS:
+                if ep in gen.STATE_ENDPOINTS:
+                    continue
+                got = sorted(r["copy"] for r in reqs[i:i + 3 * n] if r["ep"] == ep)
+                self.assertEqual(got, [0, 1, 2], ep)
+
+    def test_picks_follow_fixture_counts(self):
+        rng = __import__("random").Random(9)
+        got = [gen.pick(rng, {"a": 9, "b": 1}) for _ in range(2000)]
+        self.assertGreater(got.count("a"), 1700)
+        self.assertGreater(got.count("b"), 100)
 
 
 class ReplicaTest(TempDirTest):
