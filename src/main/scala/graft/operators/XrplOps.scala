@@ -12,10 +12,10 @@ import graft.xrpl.XrplTables
   *
   * Each query parses the bundled reference mock ledgers (the same 54
   * fixtures the reference's test suite uses), dumps the parsed tables
-  * as parquet under /tmp/graft_xrpl, runs the domain operator in
-  * Spark, and pairs it with DuckDB oracle SQL reading those dumps — so
-  * the exchange/payment/stats/fee query semantics are hash-verified
-  * cross-engine, not just unit-tested.
+  * as parquet under the checkout's target/graft_xrpl, runs the domain
+  * operator in Spark, and pairs it with DuckDB oracle SQL reading those
+  * dumps — so the exchange/payment/stats/fee query semantics are
+  * hash-verified cross-engine, not just unit-tested.
   *
   * Volumes sum through DECIMAL so results are order-independent and
   * bit-identical across engines (see graft.functions.Cols).

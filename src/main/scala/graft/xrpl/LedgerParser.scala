@@ -1,8 +1,13 @@
 package graft.xrpl
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
+import org.apache.spark.sql.functions.{col, explode}
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+import org.apache.spark.sql.types.ArrayType
 import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
 
 import Json._
 import Scalars._
@@ -140,24 +145,52 @@ object LedgerParser {
 
 /** Projections of the parsed bundle into the individual datasets —
   * the 10 derived HBase tables of the reference (SURVEY.md §1.2).
+  *
+  * Each table is a column projection of the cached bundle: `explode`
+  * of its array field (or the struct field itself), then the element's
+  * fields. The in-memory scan then reads only that one column, where
+  * a typed `flatMap(_.x)` would deserialize every whole
+  * [[ParsedLedger]] (all 12 sequences plus the tx/meta JSON) on each
+  * query, because the cache sits between the parse and the projection.
+  * The fields keep their encoder nullability: `explode` marks every
+  * field of an array element nullable, so the non-nullable ones are
+  * re-asserted with `KnownNotNull`, and the schema stays
+  * `Encoders.product[T].schema`.
+  *
+  * The streaming daemons keep `b.flatMap(_.x)`: there the parse `map`
+  * and the `flatMap` are adjacent, and EliminateSerialization already
+  * removes the round trip between them.
   */
 final class XrplTables(spark: SparkSession, bundles: Dataset[ParsedLedger]) {
-  import spark.implicits._
 
   lazy val cached: Dataset[ParsedLedger] = bundles.cache()
 
-  def ledgers: Dataset[LedgerRow] = cached.map(_.ledger)
-  def transactions: Dataset[TransactionRow] = cached.flatMap(_.transactions)
-  def exchanges: Dataset[Exchange] = cached.flatMap(_.exchanges)
-  def offers: Dataset[OfferEvent] = cached.flatMap(_.offers)
-  def balanceChanges: Dataset[BalanceChange] = cached.flatMap(_.balanceChanges)
-  def payments: Dataset[Payment] = cached.flatMap(_.payments)
-  def accountsCreated: Dataset[AccountCreated] = cached.flatMap(_.accountsCreated)
-  def affectedAccounts: Dataset[AffectedAccount] = cached.flatMap(_.affectedAccounts)
-  def memos: Dataset[MemoRow] = cached.flatMap(_.memos)
-  def escrows: Dataset[EscrowRow] = cached.flatMap(_.escrows)
-  def paychans: Dataset[PayChanRow] = cached.flatMap(_.paychans)
-  def feeSummaries: Dataset[FeeSummary] = cached.map(_.feeSummary)
+  /** The rows of bundle field `field`: one per element of an array
+    * field, else the struct field itself. */
+  private def project[T <: Product : TypeTag](field: String): Dataset[T] = {
+    val enc = Encoders.product[T]
+    val rows = cached.schema(field).dataType match {
+      case _: ArrayType => explode(col(field))
+      case _ => col(field)
+    }
+    cached.select(rows.as("r")).select(enc.schema.fields.toSeq.map { f =>
+      val c = col("r").getField(f.name)
+      (if (f.nullable) c else column(KnownNotNull(expression(c)))).as(f.name)
+    }: _*).as(enc)
+  }
+
+  def ledgers: Dataset[LedgerRow] = project[LedgerRow]("ledger")
+  def transactions: Dataset[TransactionRow] = project[TransactionRow]("transactions")
+  def exchanges: Dataset[Exchange] = project[Exchange]("exchanges")
+  def offers: Dataset[OfferEvent] = project[OfferEvent]("offers")
+  def balanceChanges: Dataset[BalanceChange] = project[BalanceChange]("balanceChanges")
+  def payments: Dataset[Payment] = project[Payment]("payments")
+  def accountsCreated: Dataset[AccountCreated] = project[AccountCreated]("accountsCreated")
+  def affectedAccounts: Dataset[AffectedAccount] = project[AffectedAccount]("affectedAccounts")
+  def memos: Dataset[MemoRow] = project[MemoRow]("memos")
+  def escrows: Dataset[EscrowRow] = project[EscrowRow]("escrows")
+  def paychans: Dataset[PayChanRow] = project[PayChanRow]("paychans")
+  def feeSummaries: Dataset[FeeSummary] = project[FeeSummary]("feeSummary")
 }
 
 object XrplTables {

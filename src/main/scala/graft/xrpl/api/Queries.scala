@@ -60,28 +60,27 @@ object Queries {
     if (autobridgedOnly) df = df.filter(col("autobridged_currency").isNotNull)
     df = timeFilter(df, "time", opts)
 
-    val typed = df
-      .withColumn("rate_d", col("rate").cast("double"))
-      .withColumn("base_d", col("base_amount").cast("double"))
-      .withColumn("counter_d", col("counter_amount").cast("double"))
+    val rate = col("rate").cast("double")
+    val baseD = col("base_amount").cast("double")
+    val counterD = col("counter_amount").cast("double")
 
     // *_raw keep the source's exact decimal strings so aggregating
     // callers can sum them losslessly (string → DECIMAL(38,18), exact
     // in any engine); the double columns serve the row-level API shape.
     if (!invert)
-      typed.select(col("time"), col("ledger_index"), col("tx_index"),
-        col("node_index"), col("base_d").as("base_amount"),
-        col("counter_d").as("counter_amount"), col("rate_d").as("rate"),
+      df.select(col("time"), col("ledger_index"), col("tx_index"),
+        col("node_index"), baseD.as("base_amount"),
+        counterD.as("counter_amount"), rate.as("rate"),
         col("base_amount").as("base_amount_raw"),
         col("counter_amount").as("counter_amount_raw"),
         col("buyer"), col("seller"), col("taker"), col("provider"),
         col("offer_sequence"), col("tx_hash"), col("tx_type"),
         col("autobridged_currency"))
     else
-      typed.select(col("time"), col("ledger_index"), col("tx_index"),
+      df.select(col("time"), col("ledger_index"), col("tx_index"),
         col("node_index"),
-        col("counter_d").as("base_amount"), col("base_d").as("counter_amount"),
-        (lit(1d) / col("rate_d")).as("rate"),
+        counterD.as("base_amount"), baseD.as("counter_amount"),
+        (lit(1d) / rate).as("rate"),
         col("counter_amount").as("base_amount_raw"),
         col("base_amount").as("counter_amount_raw"),
         col("seller").as("buyer"), col("buyer").as("seller"),
@@ -126,12 +125,11 @@ object Queries {
     var df = exchanges.filter(col("buyer") === account || col("seller") === account)
     base.foreach(p => df = df.filter(legEq("base_currency", "base_issuer", p)))
     counter.foreach(p => df = df.filter(legEq("counter_currency", "counter_issuer", p)))
+    val asDouble = Set("base_amount", "counter_amount", "rate")
     timeFilter(df, "time", opts)
-      .withColumn("side",
-        when(col("buyer") === account, lit("buy")).otherwise(lit("sell")))
-      .withColumn("base_amount", col("base_amount").cast("double"))
-      .withColumn("counter_amount", col("counter_amount").cast("double"))
-      .withColumn("rate", col("rate").cast("double"))
+      .select(df.columns.toSeq.map(c =>
+        if (asDouble(c)) col(c).cast("double").as(c) else col(c)) :+
+        when(col("buyer") === account, lit("buy")).otherwise(lit("sell")).as("side"): _*)
       .orderBy(pageOrder(opts, col("time"), col("ledger_index"),
         col("tx_index"), col("node_index")): _*)
       .limit(opts.limit)
@@ -158,29 +156,21 @@ object Queries {
     val candles0 = timeFilter(
       Candles.fromExchanges(pairEx, unit, multiple), "start", opts)
 
-    val candles =
-      if (!invert) candles0
-      else candles0
-        .withColumn("nbase", col("counter_volume"))
-        .withColumn("ncounter", col("base_volume"))
-        .withColumn("nhigh", lit(1d) / col("low"))
-        .withColumn("nlow", lit(1d) / col("high"))
-        .withColumn("nopen", lit(1d) / col("open"))
-        .withColumn("nclose", lit(1d) / col("close"))
-        .withColumn("nvwap", lit(1d) / col("vwap"))
-        .withColumn("nbuy", col("buy_volume") / (lit(1d) / col("vwap")))
-        .drop("base_volume", "counter_volume", "high", "low", "open", "close",
-          "vwap", "buy_volume")
-        .withColumnRenamed("nbase", "base_volume")
-        .withColumnRenamed("ncounter", "counter_volume")
-        .withColumnRenamed("nhigh", "high")
-        .withColumnRenamed("nlow", "low")
-        .withColumnRenamed("nopen", "open")
-        .withColumnRenamed("nclose", "close")
-        .withColumnRenamed("nvwap", "vwap")
-        .withColumnRenamed("nbuy", "buy_volume")
-
-    candles
+    if (!invert) candles0
+    else {
+      // the inverted aggregates follow the pair-independent columns
+      val inverted = Seq(
+        "base_volume" -> col("counter_volume"),
+        "counter_volume" -> col("base_volume"),
+        "high" -> lit(1d) / col("low"),
+        "low" -> lit(1d) / col("high"),
+        "open" -> lit(1d) / col("open"),
+        "close" -> lit(1d) / col("close"),
+        "vwap" -> lit(1d) / col("vwap"),
+        "buy_volume" -> col("buy_volume") / (lit(1d) / col("vwap")))
+      val kept = candles0.columns.toSeq.filterNot(inverted.map(_._1).contains)
+      candles0.select(kept.map(col) ++ inverted.map { case (n, c) => c.as(n) }: _*)
+    }
   }
 
   /** The paged /v2/exchanges interval read: candle core + page order. */

@@ -1,9 +1,13 @@
 package graft.xrpl.store
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
-import graft.xrpl.XrplTables
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DateType, StructField, StructType}
+
+import graft.xrpl._
+import graft.xrpl.agg.Candles
 
 /** Storage layout (SURVEY.md §1.4 / §4): each derived dataset is
   * parquet partitioned by `date`, sorted within partitions by the
@@ -19,27 +23,51 @@ import graft.xrpl.XrplTables
   */
 object XrplStore {
 
-  /** table name → (time column, in-partition sort keys ≙ rowkey). */
-  val layout: Map[String, (String, Seq[String])] = Map(
-    "ledgers" -> ("close_time", Seq("ledger_index")),
-    "transactions" -> ("executed_time", Seq("ledger_index", "tx_index")),
-    "exchanges" -> ("time", Seq("base_currency", "base_issuer",
+  /** One stored table: its time column (empty ⇒ the row's own `date`
+    * string), its in-partition sort keys (≙ rowkey) and the schema it
+    * reads back with.
+    */
+  final case class Table(timeCol: String, sortKeys: Seq[String], schema: StructType)
+
+  /** The table of rows `T`. Its read schema is what [[write]] leaves on
+    * disk: the encoder's fields minus `date`, then the `date` partition
+    * column, every field nullable as a parquet read makes it.
+    */
+  private def table[T <: Product : TypeTag](timeCol: String, sortKeys: String*): Table = {
+    val fields = Encoders.product[T].schema.fields.filterNot(_.name == "date")
+    Table(timeCol, sortKeys, nullable(StructType(fields :+ StructField("date", DateType))))
+  }
+
+  private def nullable(s: StructType): StructType =
+    StructType(s.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(dt: DataType): DataType = dt match {
+    case s: StructType => nullable(s)
+    case a: ArrayType => ArrayType(nullableType(a.elementType), containsNull = true)
+    case other => other
+  }
+
+  /** table name → [[Table]]. */
+  val layout: Map[String, Table] = Map(
+    "ledgers" -> table[LedgerRow]("close_time", "ledger_index"),
+    "transactions" -> table[TransactionRow]("executed_time", "ledger_index", "tx_index"),
+    "exchanges" -> table[Exchange]("time", "base_currency", "base_issuer",
       "counter_currency", "counter_issuer", "time", "ledger_index",
-      "tx_index", "node_index")),
-    "offers" -> ("executed_time", Seq("account", "executed_time",
-      "ledger_index", "tx_index")),
-    "balance_changes" -> ("time", Seq("account", "time", "ledger_index",
-      "tx_index", "node_index")),
-    "payments" -> ("time", Seq("currency", "issuer", "time", "ledger_index",
-      "tx_index")),
-    "accounts_created" -> ("time", Seq("time", "ledger_index", "tx_index")),
-    "affected_accounts" -> ("time", Seq("account", "time", "ledger_index",
-      "tx_index")),
-    "memos" -> ("executed_time", Seq("account", "executed_time",
-      "ledger_index", "tx_index", "memo_index")),
-    "escrows" -> ("time", Seq("account", "time", "ledger_index", "tx_index")),
-    "paychan" -> ("time", Seq("account", "time", "ledger_index", "tx_index")),
-    "fee_summaries" -> ("", Seq("ledger_index")))
+      "tx_index", "node_index"),
+    "offers" -> table[OfferEvent]("executed_time", "account", "executed_time",
+      "ledger_index", "tx_index"),
+    "balance_changes" -> table[BalanceChange]("time", "account", "time", "ledger_index",
+      "tx_index", "node_index"),
+    "payments" -> table[Payment]("time", "currency", "issuer", "time", "ledger_index",
+      "tx_index"),
+    "accounts_created" -> table[AccountCreated]("time", "time", "ledger_index", "tx_index"),
+    "affected_accounts" -> table[AffectedAccount]("time", "account", "time", "ledger_index",
+      "tx_index"),
+    "memos" -> table[MemoRow]("executed_time", "account", "executed_time",
+      "ledger_index", "tx_index", "memo_index"),
+    "escrows" -> table[EscrowRow]("time", "account", "time", "ledger_index", "tx_index"),
+    "paychan" -> table[PayChanRow]("time", "account", "time", "ledger_index", "tx_index"),
+    "fee_summaries" -> table[FeeSummary]("", "ledger_index"))
 
   private def withDate(df: DataFrame, timeCol: String): DataFrame =
     if (timeCol.isEmpty) df.withColumn("date", to_date(col("date")))
@@ -47,7 +75,7 @@ object XrplStore {
 
   def write(df: DataFrame, name: String, rootDir: String,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val (timeCol, sortKeys) = layout(name)
+    val Table(timeCol, sortKeys, _) = layout(name)
     // the sort MUST lead with the partition column: FileFormatWriter
     // requires its input ordered by the partition columns and inserts
     // its own (unstable) sort-by-date when the child ordering doesn't
@@ -109,7 +137,7 @@ object XrplStore {
   def writeZOrdered(df: DataFrame, name: String, rootDir: String,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
     require(zorderEntity.contains(name), s"no z-order dims for $name")
-    val (timeCol, sortKeys) = layout(name)
+    val Table(timeCol, sortKeys, _) = layout(name)
     // date leads for the same FileFormatWriter reason as in [[write]]
     withDate(df, timeCol)
       .repartition(col("date"))
@@ -138,8 +166,13 @@ object XrplStore {
     write(t.feeSummaries.toDF(), "fee_summaries", rootDir)
   }
 
+  /** Read one stored table with its [[layout]] schema. A known schema
+    * spares the footer-reading job that schema inference runs on every
+    * read; a column missing on disk reads as null rather than being
+    * left out.
+    */
   def read(spark: SparkSession, rootDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$rootDir/$name")
+    spark.read.schema(layout(name).schema).parquet(s"$rootDir/$name")
 
   /** Bucketed variant for co-located joins: both sides of a recurring
     * equi-join (e.g. affected-account index ⋈ transactions on tx_hash)
@@ -162,16 +195,33 @@ object XrplStore {
     * re-reducing raw trades (data.js:1665-1691 table routing).
     */
   def writeCandleStore(exchanges: DataFrame, rootDir: String): Unit = {
-    import graft.xrpl.agg.Candles
     Candles.cascade(exchanges).foreach { case (interval, candles) =>
       candles.write.mode(SaveMode.Overwrite)
         .parquet(s"$rootDir/agg_exchanges/interval=$interval")
     }
   }
 
-  /** Read one interval's pre-aggregated candles. */
+  private var candleSchemaMemo: Option[StructType] = None
+
+  /** The candle store's read schema: the minute candles' columns, which
+    * every interval of the cascade shares, all nullable. Derived once
+    * per JVM, since analysing the cascade costs about what a known
+    * schema saves on a read.
+    */
+  private def candleSchema(spark: SparkSession): StructType = synchronized {
+    candleSchemaMemo.getOrElse {
+      val ex = spark.emptyDataset(Encoders.product[Exchange]).toDF()
+      val s = nullable(Candles.fromExchanges(ex).schema)
+      candleSchemaMemo = Some(s)
+      s
+    }
+  }
+
+  /** Read one interval's pre-aggregated candles, with the known
+    * candle schema (see [[read]]). */
   def readCandles(spark: SparkSession, rootDir: String, interval: String): DataFrame =
-    spark.read.parquet(s"$rootDir/agg_exchanges/interval=$interval")
+    spark.read.schema(candleSchema(spark))
+      .parquet(s"$rootDir/agg_exchanges/interval=$interval")
 
   /** S8: removeLedger — the reference deletes every derived row of a
     * ledger across its tables (data.js:3133-3216). In an immutable

@@ -1,10 +1,13 @@
 package graft.xrpl
 
 import java.nio.file.Files
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.CandleStream
+import graft.xrpl.agg.Candles
 import graft.xrpl.store.XrplStore
 
 /** Round-trip the partitioned store and drive the streaming candle job
@@ -37,6 +40,31 @@ class StoreStreamSpec extends AnyFunSuite {
     assert(pruned.count() > 0)
     val pay = XrplStore.read(spark, dir, "payments")
     assert(pay.count() === 182L)
+  }
+
+  test("store reads: the layout schema is the on-disk schema; no Spark job") {
+    val dir = Files.createTempDirectory("graft-schema").toString
+    XrplStore.writeAll(tables, dir)
+    XrplStore.writeCandleStore(tables.exchanges.toDF(), dir)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val reads = XrplStore.layout.keys.toSeq.sorted.map { n =>
+      (n, () => XrplStore.read(spark, dir, n), s"$dir/$n")
+    } ++ Candles.intervals.map(_._1).map { i =>
+      (i, () => XrplStore.readCandles(spark, dir, i), s"$dir/agg_exchanges/interval=$i")
+    }
+    sc.addSparkListener(listener)
+    try reads.foreach { case (name, read, path) =>
+      GraftListenerBridge.drainListenerBus(sc, 10000)
+      jobs.set(0)
+      val df = read()
+      GraftListenerBridge.drainListenerBus(sc, 10000)
+      assert(jobs.get === 0, s"$name: jobs started building the read")
+      assert(df.schema === spark.read.parquet(path).schema, name)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("removeLedger: anti-join rewrite removes only that ledger's rows") {
