@@ -22,9 +22,10 @@ import graft.xrpl.XrplTables
   */
 object XrplOps {
 
-  // inside the repo (gitignored) so the driver's DuckDB stage sees the
-  // same filesystem the Verify stage wrote to
-  private val DumpDir = "/root/repo/target/graft_xrpl"
+  // inside the checkout the JVM runs in (gitignored), so the DuckDB
+  // stage sees the same filesystem the Verify stage wrote to; absolute,
+  // because the oracle SQL names the dump files by path
+  private[graft] val DumpDir = new java.io.File("target/graft_xrpl").getAbsolutePath
   private val Dec = DecimalType(38, 18)
 
   // @volatile + synchronized is deliberate belt-and-braces: the flag

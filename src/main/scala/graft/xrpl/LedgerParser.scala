@@ -197,11 +197,12 @@ object XrplTables {
 
   /** The bundled reference mock-ledger fixtures. `sbt run` packages
     * resources into a jar (not a readable directory for
-    * spark.read.text), so prefer the source tree when present.
+    * spark.read.text), so prefer the source tree of the checkout the
+    * JVM runs in (its working directory) when present.
     */
   def fixturesPath: String =
-    Seq("/root/repo/src/main/resources/ledgers", "src/main/resources/ledgers")
-      .find(p => new java.io.File(p).isDirectory)
+    Some(new java.io.File("src/main/resources/ledgers").getAbsoluteFile)
+      .filter(_.isDirectory).map(_.getPath)
       .orElse(Option(getClass.getResource("/ledgers")).map(_.getPath))
       .getOrElse(sys.error("ledger fixtures not found"))
 

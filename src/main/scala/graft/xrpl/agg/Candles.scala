@@ -18,12 +18,17 @@ import org.apache.spark.sql.types.DecimalType
   *  - coarser intervals re-reduce child candles via sort_open /
   *    sort_close (exchanges.js:282-359) — the merge is associative, so
   *    the whole cascade is map-side-combinable and shuffles only
-  *    (pair, bucket) keys. No raw-trade rescan above 1 minute.
+  *    (pair, bucket) keys.
   *
   * Scale: groupBy keys are (pair, bucket) — high cardinality and
-  * uniform; partial aggregation makes each rollup a small shuffle of
-  * already-reduced candles (13 intervals ≈ 13 tiny shuffles, the
-  * reference's cascade, exchanges.js:12-25).
+  * uniform; partial aggregation keeps every shuffle one of (pair,
+  * bucket) partial rows. The minute candles are not persisted, so each
+  * coarser interval's job re-scans the raw trades and re-reduces them
+  * to minute candles before its own rollup: materializing the 13
+  * intervals of [[cascade]] (the reference's cascade,
+  * exchanges.js:12-25) runs 13 jobs and 25 shuffles (one for 1minute,
+  * two for each of the 12 rollups). `XrplStore.writeCandleStore` runs
+  * the 13 jobs at once.
   */
 object Candles {
   private val Dec = DecimalType(38, 18)
@@ -93,10 +98,12 @@ object Candles {
     */
   def fromExchanges(ex: DataFrame, unit: String = "minute", multiple: Int = 1,
       dustFilter: Boolean = true): DataFrame = {
-    val typed = ex
-      .withColumn("rate_d", col("rate").cast("double"))
-      .withColumn("base_d", col("base_amount").cast("double"))
-      .withColumn("counter_d", col("counter_amount").cast("double"))
+    val typed = ex.select(col("*"),
+      col("rate").cast("double").as("rate_d"),
+      col("base_amount").cast("double").as("base_d"),
+      col("counter_amount").cast("double").as("counter_d"),
+      sortKey.as("sk"),
+      alignExpr(col("time"), unit, multiple).as("start"))
     val filtered =
       if (dustFilter)
         typed.filter(
@@ -105,8 +112,6 @@ object Candles {
       else typed
 
     filtered
-      .withColumn("sk", sortKey)
-      .withColumn("start", alignExpr(col("time"), unit, multiple))
       .groupBy(col("start") +: pairCols.map(col): _*)
       .agg(
         min_by(col("rate_d"), col("sk")).as("open"),
@@ -134,8 +139,7 @@ object Candles {
     */
   def rollup(candles: DataFrame, unit: String, multiple: Int): DataFrame =
     candles
-      .withColumn("rstart", alignExpr(col("start"), unit, multiple))
-      .groupBy(col("rstart") +: pairCols.map(col): _*)
+      .groupBy(alignExpr(col("start"), unit, multiple).as("start") +: pairCols.map(col): _*)
       .agg(
         min_by(col("open"), col("sort_open")).as("open"),
         max_by(col("close"), col("sort_close")).as("close"),
@@ -152,7 +156,6 @@ object Candles {
         sum(col("counter_volume").cast(Dec)).cast("double").as("counter_volume"),
         sum(col("buy_volume").cast(Dec)).cast("double").as("buy_volume"),
         sum(col("count")).as("count"))
-      .withColumnRenamed("rstart", "start")
       .withColumn("vwap", col("counter_volume") / col("base_volume"))
 
   /** Build the full interval cascade: 1-minute from raw trades, then

@@ -149,21 +149,58 @@ object XrplStore {
   }
 
   /** Persist every derived table (the reference's saveParsedData,
-    * data.js:2729-3127 — minus the lu_* fan-out copies).
+    * data.js:2729-3127 — minus the lu_* fan-out copies). The 12 writes
+    * are independent small jobs, so they run at once (see [[runAll]]):
+    * the call returns when all of them have finished and rethrows the
+    * first failure.
     */
-  def writeAll(t: XrplTables, rootDir: String): Unit = {
-    write(t.ledgers.toDF(), "ledgers", rootDir)
-    write(t.transactions.toDF(), "transactions", rootDir)
-    write(t.exchanges.toDF(), "exchanges", rootDir)
-    write(t.offers.toDF(), "offers", rootDir)
-    write(t.balanceChanges.toDF(), "balance_changes", rootDir)
-    write(t.payments.toDF(), "payments", rootDir)
-    write(t.accountsCreated.toDF(), "accounts_created", rootDir)
-    write(t.affectedAccounts.toDF(), "affected_accounts", rootDir)
-    write(t.memos.toDF(), "memos", rootDir)
-    write(t.escrows.toDF(), "escrows", rootDir)
-    write(t.paychans.toDF(), "paychan", rootDir)
-    write(t.feeSummaries.toDF(), "fee_summaries", rootDir)
+  def writeAll(t: XrplTables, rootDir: String): Unit = runAll(Seq(
+    () => write(t.ledgers.toDF(), "ledgers", rootDir),
+    () => write(t.transactions.toDF(), "transactions", rootDir),
+    () => write(t.exchanges.toDF(), "exchanges", rootDir),
+    () => write(t.offers.toDF(), "offers", rootDir),
+    () => write(t.balanceChanges.toDF(), "balance_changes", rootDir),
+    () => write(t.payments.toDF(), "payments", rootDir),
+    () => write(t.accountsCreated.toDF(), "accounts_created", rootDir),
+    () => write(t.affectedAccounts.toDF(), "affected_accounts", rootDir),
+    () => write(t.memos.toDF(), "memos", rootDir),
+    () => write(t.escrows.toDF(), "escrows", rootDir),
+    () => write(t.paychans.toDF(), "paychan", rootDir),
+    () => write(t.feeSummaries.toDF(), "fee_summaries", rootDir)))
+
+  /** Run independent jobs at once and wait for every one of them. The
+    * store's write jobs have 1–2 tasks each and leave most cores idle
+    * on their own; submitted together, their per-job scheduling, task
+    * and commit costs overlap.
+    *
+    * Each job gets its own thread, created here by the calling thread,
+    * so it inherits the caller's Spark local properties — job group,
+    * scheduler pool, and a streaming query's id under `foreachBatch`
+    * (a long-lived shared pool could carry those of whichever thread
+    * first created its threads). The call returns only when no job is
+    * still running, also if the caller is interrupted while it waits;
+    * it then rethrows the first failure in list order, with the others
+    * added as suppressed.
+    */
+  private[store] def runAll(jobs: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](jobs.size)
+    val threads = jobs.zipWithIndex.map { case (job, i) =>
+      val t = new Thread(() => try job() catch { case e: Throwable => failures(i) = e },
+        s"xrpl-store-job-$i")
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    val failed = failures.filter(_ != null)
+    failed.headOption.foreach { first =>
+      failed.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   /** Read one stored table with its [[layout]] schema. A known schema
@@ -192,14 +229,16 @@ object XrplStore {
   /** Materialize the candle cascade as agg_exchanges partitions —
     * the reference's pre-aggregation tables (§4: "keep the
     * agg-building jobs"); interval queries then read these instead of
-    * re-reducing raw trades (data.js:1665-1691 table routing).
+    * re-reducing raw trades (data.js:1665-1691 table routing). The 13
+    * interval writes are independent jobs and run at once (see
+    * [[runAll]]): the call returns when all of them have finished and
+    * rethrows the first failure.
     */
-  def writeCandleStore(exchanges: DataFrame, rootDir: String): Unit = {
-    Candles.cascade(exchanges).foreach { case (interval, candles) =>
-      candles.write.mode(SaveMode.Overwrite)
+  def writeCandleStore(exchanges: DataFrame, rootDir: String): Unit =
+    runAll(Candles.cascade(exchanges).toSeq.map { case (interval, candles) =>
+      () => candles.write.mode(SaveMode.Overwrite)
         .parquet(s"$rootDir/agg_exchanges/interval=$interval")
-    }
-  }
+    })
 
   private var candleSchemaMemo: Option[StructType] = None
 

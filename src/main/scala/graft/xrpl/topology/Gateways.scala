@@ -20,11 +20,11 @@ import org.apache.spark.sql.types._
   */
 object Gateways {
 
-  /** Fixture root (reference gateway registry + asset manifests). */
+  /** Fixture root (reference gateway registry + asset manifests): the
+    * working directory's source tree, else the classpath. */
   def fixture(name: String): String =
-    Seq(s"/root/repo/src/main/resources/gateways/$name",
-      s"src/main/resources/gateways/$name")
-      .find(p => new java.io.File(p).isFile)
+    Some(new java.io.File(s"src/main/resources/gateways/$name").getAbsoluteFile)
+      .filter(_.isFile).map(_.getPath)
       .orElse(Option(getClass.getResource(s"/gateways/$name")).map(_.getPath))
       .getOrElse(sys.error(s"gateway fixture $name not found"))
 

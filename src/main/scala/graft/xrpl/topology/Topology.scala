@@ -11,11 +11,11 @@ import org.apache.spark.sql.functions._
   */
 object Topology {
 
-  /** Fixture root (reference mock crawl/validation data). */
+  /** Fixture root (reference mock crawl/validation data): the working
+    * directory's source tree, else the classpath. */
   def networkFixture(name: String): String =
-    Seq(s"/root/repo/src/main/resources/network/$name",
-      s"src/main/resources/network/$name")
-      .find(p => new java.io.File(p).isFile)
+    Some(new java.io.File(s"src/main/resources/network/$name").getAbsoluteFile)
+      .filter(_.isFile).map(_.getPath)
       .orElse(Option(getClass.getResource(s"/network/$name")).map(_.getPath))
       .getOrElse(sys.error(s"network fixture $name not found"))
 
