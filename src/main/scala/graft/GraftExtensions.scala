@@ -86,11 +86,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           graft.functions.HilbertKey(exprs.head, exprs(1),
             exprs(2).eval().asInstanceOf[Int])
         else graft.functions.HilbertKey(exprs.head, exprs(1))))
-    // whole-operator custom plan: top-k per key via bounded heaps
-    // (partial/final pair — see graft.plans.TopKPerKey); sessions not
-    // built with these extensions get the strategy installed lazily by
-    // TopKPerKey.topK itself
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+    // the one planner strategy for the custom physical operators: the
+    // range scan (running sum / max / forward fill) and the top-k per
+    // key heap pair; sessions not built with these extensions get it
+    // registered lazily by RangeScan.scan and TopKPerKey.topK
+    ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
     // optimizer rule: the stock `row_number().over(...) <= k` spelling
     // heap-prunes through TopKPerKeyNode before the window executes
     // (graft.plans.TopKWindowRewrite — row_number only, keep-head only)

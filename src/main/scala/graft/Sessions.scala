@@ -68,9 +68,9 @@ object Sessions {
     })
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // custom physical operators (GlobalCumsum, RangeForwardFill) are
-    // planned by one session-registered strategy; the operator
-    // builders also register defensively for externally-built sessions
+    // custom physical operators (RangeScan, TopKPerKey) are planned by
+    // one session-registered strategy; RangeScan.scan and
+    // TopKPerKey.topK also register it for externally-built sessions
     graft.plans.GraftStrategies.register(s)
     s
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.RangeScan
+
 /** Distributed backward as-of join (point-in-time join): every probe
   * row picks up the payload of the build row with the GREATEST build
   * time ≤ its probe time, per key — the rates-to-trades /
@@ -18,7 +20,7 @@ import org.apache.spark.sql.functions._
   * join, no range explosion, no driver loops. Keys partition uniformly
   * when the key is an entity id; for a pathological hot key use
   * [[asofBackwardBucketed]], which runs the same relation through the
-  * [[graft.plans.RangeForwardFill]] custom operator (range exchange —
+  * [[graft.plans.RangeScan]] custom operator (range exchange —
   * a hot key spans many partitions — with bounded boundary carries).
   *
   * Why TWO spellings (r17, measured): the custom operator's range
@@ -113,32 +115,31 @@ object AsOfJoin {
     * no per-key window over the raw rows — a single pathological key
     * (one currency, one global feed) cannot serialize into one task.
     *
-    * Since r17 this is the [[graft.plans.RangeForwardFill]] custom
-    * physical operator: ONE range exchange on (key, time, side) — a
-    * hot key spans many partitions — and a streamed O(1)-state fill
-    * whose partition boundaries are stitched by a bounded carry
-    * collected inside the operator (over the SAME shuffled RDD, so
-    * both passes see one partition assignment by construction). The
+    * Since r17 this is a custom physical operator, now
+    * [[graft.plans.RangeScan]] with the last-non-null fold: ONE range
+    * exchange on (key, time, side) — a hot key spans many partitions —
+    * and a streamed O(1)-state fill whose partition boundaries are
+    * stitched by a bounded carry collected inside the operator (over
+    * the SAME shuffled RDD, so both passes see one partition
+    * assignment by construction). The
     * pre-r17 stock-operator spelling paid a second full-data hash
     * exchange (the pid-keyed window), a persist, a separate carry
     * aggregate + broadcast join, and an eager localCheckpoint per
     * call — all gone (j_asof_skewed 1.42 → 0.66 s at sf0.1, −53%).
     *
-    * `partitions` is accepted for source compatibility but IGNORED:
-    * the operator's range exchange is sized by the session (shuffle
+    * The operator's range exchange is sized by the session (shuffle
     * partitions + AQE coalescing). Results are partition-count
     * independent under the (key, time)-uniqueness contract.
     */
   def asofBackwardBucketed(probe: DataFrame, probeKey: String,
       probeTime: String, build: DataFrame, buildKey: String,
-      buildTime: String, payload: Seq[String],
-      partitions: Int = 0): DataFrame = {
-    val filled = graft.plans.RangeForwardFill.fill(
+      buildTime: String, payload: Seq[String]): DataFrame = {
+    val filled = RangeScan.scan(
       taggedUnion(probe, probeKey, probeTime, build, buildKey, buildTime,
         payload),
       keys = Seq(col("__k")),
       order = Seq(col("__t").asc, col("__side").asc),
-      value = col("__pl"), outName = "__fill")
+      values = Seq(col("__pl") -> "__fill"), fold = RangeScan.LastNonNull)
     project(filled, probe, payload, "__fill")
   }
 }

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.plans.RangeScan
+
 /** Distributed 2-D skyline (Pareto frontier, maximizing both
   * dimensions): the rows no other row dominates, where `d` dominates
   * `r` iff d.x ≥ r.x ∧ d.y ≥ r.y with at least one strict.
@@ -12,7 +14,7 @@ import org.apache.spark.sql.functions._
   * sort-scan: a row survives iff its y strictly exceeds the maximum y
   * over all rows of strictly greater x, and no same-x row has greater
   * y. That exclusive prefix-max over x-descending order runs as the
-  * [[graft.plans.GlobalCumsum.runningMaxExclusive]] custom operator —
+  * [[graft.plans.RangeScan]] custom operator (max fold, exclusive) —
   * ONE range exchange, per-partition streaming max, boundary offsets
   * collected bounded-by-partition-count inside the operator. Since
   * r17 this replaced the stock-operator spelling (repartitionByRange
@@ -29,16 +31,15 @@ object ParetoFront {
     * x and y must be orderable scalar columns (numeric / date /
     * timestamp / string).
     */
-  def skyline2d(df: DataFrame, xCol: String, yCol: String,
-      partitions: Int = 0): DataFrame = {
+  def skyline2d(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     // one candidate row per x: only the max-y row of an x-group can
     // be on the frontier (same x, smaller y ⇒ dominated); x is unique
     // after the group-by, so the exclusive prefix over x-descending
     // order is exactly "max y over strictly greater x"
     val xg = df.groupBy(col(xCol)).agg(max(col(yCol)).as("__ym"))
-    val surv = graft.plans.GlobalCumsum
-      .runningMaxExclusive(xg, Seq(col(xCol).desc),
-        Seq(col("__ym") -> "__prev"))
+    val surv = RangeScan
+      .scan(xg, Nil, Seq(col(xCol).desc), Seq(col("__ym") -> "__prev"),
+        RangeScan.Max, exclusive = true)
       .filter(col("__prev").isNull || col("__ym") > col("__prev"))
       .select(col(xCol).as("__sx"), col("__ym"))
 

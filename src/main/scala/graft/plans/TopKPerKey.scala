@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
-import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
   Descending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
@@ -70,10 +69,7 @@ object TopKPerKey {
       k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.exists(
-        _.isInstanceOf[TopKPerKeyStrategy.type]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
+    GraftStrategies.register(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute =
       analyzed.output.find(_.name == n).getOrElse(
@@ -148,16 +144,6 @@ case class TopKPerKeyNode(keys: Seq[Expression], order: Seq[SortOrder],
   override def output: Seq[Attribute] = child.output
   override protected def withNewChildInternal(c: LogicalPlan)
       : LogicalPlan = copy(child = c)
-}
-
-object TopKPerKeyStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKeyNode(keys, order, k, flushKeys, child) =>
-      TopKPerKeyExec(keys, order, k, partial = false, flushKeys,
-        TopKPerKeyExec(keys, order, k, partial = true, flushKeys,
-          planLater(child))) :: Nil
-    case _ => Nil
-  }
 }
 
 case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],

@@ -32,15 +32,15 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * job), and only when the filter keeps ranks from 1: `rn <= k`,
   * `rn < k`, or `rn = 1` — as the sole condition or any conjunct.
   *
-  * Measured (tools.RewriteBench, sf0.1 events, top-3 of ~600 rows per
+  * Measured (OPTIMIZATION_r17.md; sf0.1 events, top-3 of ~600 rows per
   * key, local[32]): 1.2x over the stock WindowExec plan; the ratio
   * scales with rows-per-key since the pruned shuffle and sort stay
   * k-bounded while the stock plan's grow with the key's history.
   *
   * Install with [[TopKWindowRewrite.install]] (adds this rule to
-  * `spark.experimental.extraOptimizations` and the physical strategy
-  * to `extraStrategies`) or via `spark.sql.extensions` =
-  * graft.GraftExtensions.
+  * `spark.experimental.extraOptimizations` and registers
+  * [[GraftStrategy]], which plans the node) or via
+  * `spark.sql.extensions` = graft.GraftExtensions.
   */
 object TopKWindowRewrite extends Rule[LogicalPlan] {
 
@@ -75,14 +75,11 @@ object TopKWindowRewrite extends Rule[LogicalPlan] {
       }
   }
 
-  /** Add the rule + the physical strategy to an existing session. */
+  /** Add the rule + the graft planner strategy to an existing session. */
   def install(spark: SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(this))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ this
-    if (!spark.experimental.extraStrategies.exists(
-        _.isInstanceOf[TopKPerKeyStrategy.type]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
+    GraftStrategies.register(spark)
   }
 }

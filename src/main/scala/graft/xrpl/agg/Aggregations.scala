@@ -447,7 +447,7 @@ object Aggregations {
     val withCums = graft.functions.PrefixSum.globalCumsumMulti(
       daily, Seq(col("day")),
       Seq(col("fee_burn") -> "cum_fees", col("esc_delta") -> "cum_esc",
-        col("res_delta") -> "cum_res"), 8)
+        col("res_delta") -> "cum_res"))
 
     withCums
       .select(col("day").as("date"),

@@ -1,19 +1,13 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Package-private bridge: lets the graft library wrap a custom
   * LogicalPlan back into a DataFrame (`Dataset.ofRows` is
-  * private[sql]) and unwrap a Column to its Catalyst expression
-  * (`Column.expr` moved behind the classic implementation in
-  * Spark 4). The only things in this package, on purpose.
+  * private[sql]). The only thing in this package, on purpose.
   */
 object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
-
-  def expression(c: Column): Expression =
-    classic.ExpressionUtils.expression(c)
 }

@@ -47,14 +47,14 @@ class AsOfJoinSpec extends AnyFunSuite {
   test("bucketed variant matches on the semantic fixture") {
     assert(run((p, b) =>
       AsOfJoin.asofBackwardBucketed(p, "ccy", "t", b, "ccy", "t",
-        Seq("rate"), partitions = 4)) === expected)
+        Seq("rate"))) === expected)
   }
 
   test("matches a brute-force scan on random skewed data") {
     import spark.implicits._
     // deterministic pseudo-random data with one hot key (0) carrying
-    // half of all rows, so several range partitions hold only key 0
-    // — the boundary-carry path of RangeForwardFill is exercised
+    // half of all rows, so at 4 and 32 range partitions several hold
+    // only key 0 — the boundary carry of the forward fill is exercised
     val rnd = new scala.util.Random(20260812L)
     val build = Seq.tabulate(400) { i =>
       val k = if (i % 2 == 0) 0L else 1L + rnd.nextInt(5)
@@ -74,12 +74,15 @@ class AsOfJoinSpec extends AnyFunSuite {
     val window = toMapOf(AsOfJoin.asofBackward(
       probe.toDF("id", "k", "t"), "k", "t",
       build.toDF("k", "t", "v"), "k", "t", Seq("v")))
-    val bucketed = toMapOf(AsOfJoin.asofBackwardBucketed(
-      probe.toDF("id", "k", "t"), "k", "t",
-      build.toDF("k", "t", "v"), "k", "t", Seq("v")))
     assert(window === expected)
-    assert(bucketed === expected)
     assert(window.size === 2000)
+    for (n <- Seq(1, 4, 32)) SparkTest.withPartitions(n) {
+      val bucketed = AsOfJoin.asofBackwardBucketed(
+        probe.toDF("id", "k", "t"), "k", "t",
+        build.toDF("k", "t", "v"), "k", "t", Seq("v"))
+      assert(toMapOf(bucketed) === expected, s"partitions=$n")
+      assert(SparkTest.partitionsOf(bucketed, "RangeForwardFill") === n)
+    }
   }
 
   test("bucketed plan is one range exchange, no window, no checkpoint stub") {
@@ -94,16 +97,11 @@ class AsOfJoinSpec extends AnyFunSuite {
     val joined = AsOfJoin.asofBackwardBucketed(
       p, "k", "t", b, "k", "t", Seq("v"))
     joined.write.format("noop").mode("overwrite").save()
-    def nodes(sp: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = sp.collect {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        nodes(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        nodes(q.plan)
-      case other => Seq(other)
-    }.flatten
-    val all = nodes(joined.queryExecution.executedPlan)
-    assert(all.exists(_.isInstanceOf[graft.plans.RangeForwardFillExec]))
+    val all = SparkTest.execNodes(joined)
+    assert(all.exists {
+      case s: graft.plans.RangeScanExec => s.nodeName == "RangeForwardFill"
+      case _ => false
+    })
     assert(!all.exists(_.isInstanceOf[WindowExec]),
       "as-of plan must not contain a per-key WindowExec")
     val exchanges = all.collect {

@@ -31,8 +31,7 @@ class ParetoFrontSpec extends AnyFunSuite {
       (5L, 4L, 5L),   // dominated by 2 (lower x, same y)
       (6L, 5L, 5L),   // duplicate of 2 — incomparable, survives
       (7L, 2L, 2L))   // dominated by 2
-    val got = ParetoFront.skyline2d(
-        rows.toDF("id", "x", "y"), "x", "y", partitions = 3)
+    val got = ParetoFront.skyline2d(rows.toDF("id", "x", "y"), "x", "y")
       .select("id").as[Long].collect().toSet
     assert(got === Set(1L, 2L, 3L, 6L))
     assert(got === brute(rows))
@@ -44,11 +43,11 @@ class ParetoFrontSpec extends AnyFunSuite {
     val rows = Seq.tabulate(300)(i =>
       (i.toLong, rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
     val expected = brute(rows)
-    for (p <- Seq(1, 4, 32)) {
-      val got = ParetoFront.skyline2d(
-          rows.toDF("id", "x", "y"), "x", "y", partitions = p)
-        .select("id").as[Long].collect().toSet
-      assert(got === expected, s"partitions=$p")
+    for (p <- Seq(1, 4, 32)) SparkTest.withPartitions(p) {
+      val out = ParetoFront.skyline2d(rows.toDF("id", "x", "y"), "x", "y")
+        .select("id")
+      assert(out.as[Long].collect().toSet === expected, s"partitions=$p")
+      assert(SparkTest.partitionsOf(out, "GlobalCumsum") === p)
     }
   }
 

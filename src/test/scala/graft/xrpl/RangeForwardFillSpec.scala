@@ -3,13 +3,14 @@ package graft.xrpl
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.RangeForwardFill
+import graft.plans.RangeScan
 
-/** The r17 keyed forward-fill operator: semantics vs the stock
-  * per-key running window it replaced, with inputs crafted to hit the
-  * boundary-carry machinery — hot keys spanning many range
-  * partitions, key runs with no non-null value crossing several
-  * boundaries, all-null keys, and descending time order.
+/** The keyed forward fill ([[RangeScan]] with the last-non-null fold):
+  * semantics vs the stock per-key running window it replaced, with
+  * inputs crafted to hit the boundary-carry machinery — hot keys
+  * spanning many range partitions, key runs with no non-null value
+  * crossing several boundaries, all-null keys, and descending time
+  * order.
   */
 class RangeForwardFillSpec extends AnyFunSuite {
 
@@ -28,22 +29,39 @@ class RangeForwardFillSpec extends AnyFunSuite {
       }._1
   }
 
-  private def run(rows: Seq[(Long, Long, java.lang.Double)])
-      : Map[(Long, Long), Option[Double]] = {
+  private def fill(rows: Seq[(Long, Long, java.lang.Double)]) = {
     import spark.implicits._
-    RangeForwardFill.fill(rows.toDF("k", "t", "v"),
-        keys = Seq(col("k")), order = Seq(col("t").asc),
-        value = col("v"), outName = "fill")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (if (r.isNullAt(3)) None else Some(r.getDouble(3))))
-      .toMap
+    RangeScan.scan(rows.toDF("k", "t", "v"),
+      keys = Seq(col("k")), order = Seq(col("t").asc),
+      values = Seq(col("v") -> "fill"), fold = RangeScan.LastNonNull)
+  }
+
+  private def toMapOf(df: org.apache.spark.sql.DataFrame)
+      : Map[(Long, Long), Option[Double]] = df.collect()
+    .map(r => (r.getLong(0), r.getLong(1)) ->
+      (if (r.isNullAt(3)) None else Some(r.getDouble(3))))
+    .toMap
+
+  private def run(rows: Seq[(Long, Long, java.lang.Double)])
+      : Map[(Long, Long), Option[Double]] = toMapOf(fill(rows))
+
+  /** The fill at 1, 4 and 32 range partitions equals the oracle, and
+    * the scan really ran at each count.
+    */
+  private def checkAcrossPartitions(
+      rows: Seq[(Long, Long, java.lang.Double)]): Unit = {
+    val expected = oracle(rows)
+    for (n <- Seq(1, 4, 32)) SparkTest.withPartitions(n) {
+      val out = fill(rows)
+      assert(toMapOf(out) === expected, s"partitions=$n")
+      assert(SparkTest.partitionsOf(out, "RangeForwardFill") === n)
+    }
   }
 
   test("hot key spanning many partitions carries across boundaries") {
-    // key 0 holds 3000 rows (many range partitions at 32 shuffle
-    // partitions) with sparse non-nulls, so most boundaries carry a
-    // value found several partitions back
+    // key 0 holds 3000 rows (most of the 32 range partitions) with
+    // sparse non-nulls, so most boundaries carry a value found several
+    // partitions back
     val rows: Seq[(Long, Long, java.lang.Double)] =
       Seq.tabulate(3000) { i =>
         val v: java.lang.Double =
@@ -53,7 +71,7 @@ class RangeForwardFillSpec extends AnyFunSuite {
         (1L + (i % 3), 10000L + i,
           if (i % 7 == 0) java.lang.Double.valueOf(-i.toDouble) else null)
       }
-    assert(run(rows) === oracle(rows))
+    checkAcrossPartitions(rows)
   }
 
   test("key run with no non-null at all stays null everywhere") {
@@ -84,9 +102,9 @@ class RangeForwardFillSpec extends AnyFunSuite {
     val rows: Seq[(Long, Long, java.lang.Double)] = Seq(
       (1L, 10L, java.lang.Double.valueOf(1.0)), (1L, 20L, null),
       (1L, 30L, java.lang.Double.valueOf(3.0)), (1L, 40L, null))
-    val got = RangeForwardFill.fill(rows.toDF("k", "t", "v"),
+    val got = RangeScan.scan(rows.toDF("k", "t", "v"),
         keys = Seq(col("k")), order = Seq(col("t").desc),
-        value = col("v"), outName = "fill")
+        values = Seq(col("v") -> "fill"), fold = RangeScan.LastNonNull)
       .collect()
       .map(r => r.getLong(1) ->
         (if (r.isNullAt(3)) None else Some(r.getDouble(3))))
@@ -107,6 +125,6 @@ class RangeForwardFillSpec extends AnyFunSuite {
           else null
         (k, i.toLong, v) // t = i keeps (k, t) unique
       }
-    assert(run(rows) === oracle(rows))
+    checkAcrossPartitions(rows)
   }
 }
