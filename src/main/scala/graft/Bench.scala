@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark main: times every registered query at the target scale
   * factor and prints one JSON line.
@@ -106,6 +106,26 @@ object Bench {
     // a clean rerun measured 1.2s — with two reps a single contended
     // one is half the evidence; with three it's outvoted).
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(3)
+    // Janino compiles during the timed reps (env.codegen.compiles): 0
+    // once every query shape is in Spark's generated-class cache, so a
+    // cache too small for the working set shows in every artifact
+    var compiles = 0L
+    def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // `reps` timed evaluations of `name`, each in seconds, negated if
+    // it failed
+    def timedReps(name: String, what: String): Seq[Double] =
+      (1 to reps).map { _ =>
+        val c0 = compileCount
+        val t0 = System.nanoTime()
+        val ok = try { evalFull(name); true } catch {
+          case e: Throwable =>
+            System.err.println(s"bench: $what$name FAILED: ${e.getMessage}")
+            false
+        }
+        val dt = (System.nanoTime() - t0) / 1e9
+        compiles += compileCount - c0
+        if (ok) dt else -dt
+      }
     // a failing query must NOT read as a fast success: its elapsed
     // time is negated (sentinel) and its name listed under "errors".
     // Queries run section by section in declaration order; after each
@@ -117,16 +137,7 @@ object Bench {
     val results = SparkEntry.sections.flatMap {
       case (section, sspecs, release) =>
         val timed = sspecs.filter(q => only.forall(_(q.name))).map { q =>
-          val runs = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            val ok = try { evalFull(q.name); true } catch {
-              case e: Throwable =>
-                System.err.println(s"bench: ${q.name} FAILED: ${e.getMessage}")
-                false
-            }
-            val dt = (System.nanoTime() - t0) / 1e9
-            if (ok) dt else -dt
-          }
+          val runs = timedReps(q.name, "")
           (q.name, if (runs.exists(_ < 0)) -runs.map(math.abs).min
                    else runs.min,
             runs)
@@ -202,16 +213,7 @@ object Bench {
         warmAll() // untimed: restore the shared caches sections released
         suspects0.map { k =>
           try evalFull(k) catch { case _: Throwable => () } // untimed drain
-          val runs = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            val ok = try { evalFull(k); true } catch {
-              case e: Throwable =>
-                System.err.println(s"bench: re-measure $k FAILED: ${e.getMessage}")
-                false
-            }
-            val dt = (System.nanoTime() - t0) / 1e9
-            if (ok) dt else -dt
-          }
+          val runs = timedReps(k, "re-measure ")
           k -> (if (runs.exists(_ < 0)) -runs.map(math.abs).min
                 else runs.min, runs)
         }.toMap
@@ -285,7 +287,8 @@ object Bench {
       s"""{"cpus":"$cpus","shuffle_partitions":"${
         spark.conf.get("spark.sql.shuffle.partitions")}","jvm_max_heap_mb":${
         rt.maxMemory() / (1024 * 1024)},"jvm_available_processors":${
-        rt.availableProcessors()},"reps":$reps,"machine":$machineJson}"""
+        rt.availableProcessors()},"reps":$reps,"codegen":{"cache_max_entries":${
+        spark.conf.get("spark.sql.codegen.cache.maxEntries")},"compiles":$compiles},"machine":$machineJson}"""
     }
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repsJson,"errors":$errs,"suspect":$suspectJson,"rep_spread":$repSpreadJson,"spread_probe":$spreadProbeJson,"env":$envJson,"sf":"$sfDir"}"""

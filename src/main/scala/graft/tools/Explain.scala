@@ -1,24 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 
 /** Plan-inspection tool: prints the formatted physical plan of
   * selected gate queries so scan pushdown (PushedFilters/ReadSchema),
   * broadcast joins, WholeStageCodegen spans and TakeOrderedAndProject
-  * can be verified by eye.
+  * can be verified by eye. The session comes from [[Sessions.build]],
+  * so the printed plans are the ones Bench and Verify run.
   *
   * Usage: sbt "runMain graft.tools.Explain [queryName ...]"
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.build("4", "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
 
     val names =

@@ -157,9 +157,16 @@ object LedgerParser {
   * re-asserted with `KnownNotNull`, and the schema stays
   * `Encoders.product[T].schema`.
   *
-  * The streaming daemons keep `b.flatMap(_.x)`: there the parse `map`
-  * and the `flatMap` are adjacent, and EliminateSerialization already
-  * removes the round trip between them.
+  * The streaming daemons still use typed `b.flatMap(_.x)`. Where the
+  * parse `map` and the `flatMap` are adjacent (`feeDaemonIncremental`,
+  * `accountPaymentsDaemon`) EliminateSerialization removes the round
+  * trip between them. `liveStateDaemon` and `statsDaemonIncremental`
+  * persist the micro-batch first, so their optimized plans read
+  * `DeserializeToObject newInstance(ParsedLedger)` over the
+  * `InMemoryRelation`: every typed `flatMap`/`map` there rebuilds
+  * whole [[ParsedLedger]] objects, the cost these projections avoid.
+  * Reading the batch through projections is ROADMAP item 1's ingest
+  * step.
   */
 final class XrplTables(spark: SparkSession, bundles: Dataset[ParsedLedger]) {
 

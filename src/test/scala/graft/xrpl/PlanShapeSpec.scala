@@ -606,5 +606,35 @@ class PlanShapeSpec extends AnyFunSuite {
       "AQE skew-join splitting disabled - hot keys serialize")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC",
       "session zone drifted from the events-loader UTC contract")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000",
+      "generated-class cache resized - a gate rep's ~223 classes must " +
+        "fit, or every evaluation compiles them again")
+  }
+
+  test("codegen cache: a repeated query shape is not compiled again") {
+    // Spark's default cache of 100 generated classes is smaller than
+    // the engine's working set; at that size the 150 classes below
+    // evict the request's classes and the repeat compiles them again
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.{col, lit}
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val t = XrplTables.fromFiles(spark, XrplTables.fixturesPath)
+    t.cached.count() // the request then plans against a built cache
+    val account = t.payments.head().source
+    def request() = graft.xrpl.api.Queries.getAccountPayments(t, account)
+      .collect().toSeq
+    val first = request()
+    assert(first.nonEmpty)
+    val c0 = compiles
+    // each inlined Long literal is a distinct whole-stage class;
+    // toRdd compiles it on the driver without running a job
+    (1L to 150L).foreach(i =>
+      spark.range(1).select(col("id") + lit(i)).queryExecution.toRdd)
+    val c1 = compiles
+    assert(c1 - c0 >= 150, s"only ${c1 - c0} classes generated")
+    assert(request() == first)
+    assert(compiles == c1,
+      s"the repeated request compiled ${compiles - c1} classes again")
+    t.cached.unpersist()
   }
 }
