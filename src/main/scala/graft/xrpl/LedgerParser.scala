@@ -1,7 +1,7 @@
 package graft.xrpl
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions.{col, explode}
 import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
@@ -157,6 +157,13 @@ object LedgerParser {
   * re-asserted with `KnownNotNull`, and the schema stays
   * `Encoders.product[T].schema`.
   *
+  * The 12 projections are memoized (`lazy val`s): each is built and
+  * analysed once per instance, and every request plans on top of the
+  * same analysed `Dataset` instead of rebuilding and re-analysing the
+  * `explode` → `select` → `.as` chain. The first access from the
+  * concurrent store writes serialises on the instance lock, one
+  * analysis each.
+  *
   * The streaming daemons still use typed `b.flatMap(_.x)`. Where the
   * parse `map` and the `flatMap` are adjacent (`feeDaemonIncremental`,
   * `accountPaymentsDaemon`) EliminateSerialization removes the round
@@ -175,32 +182,39 @@ final class XrplTables(spark: SparkSession, bundles: Dataset[ParsedLedger]) {
   /** The rows of bundle field `field`: one per element of an array
     * field, else the struct field itself. */
   private def project[T <: Product : TypeTag](field: String): Dataset[T] = {
-    val enc = Encoders.product[T]
     val rows = cached.schema(field).dataType match {
       case _: ArrayType => explode(col(field))
       case _ => col(field)
     }
-    cached.select(rows.as("r")).select(enc.schema.fields.toSeq.map { f =>
-      val c = col("r").getField(f.name)
-      (if (f.nullable) c else column(KnownNotNull(expression(c)))).as(f.name)
-    }: _*).as(enc)
+    cached.select(rows.as("r")).select(XrplTables.fieldsOf[T](col("r")): _*)
+      .as(Encoders.product[T])
   }
 
-  def ledgers: Dataset[LedgerRow] = project[LedgerRow]("ledger")
-  def transactions: Dataset[TransactionRow] = project[TransactionRow]("transactions")
-  def exchanges: Dataset[Exchange] = project[Exchange]("exchanges")
-  def offers: Dataset[OfferEvent] = project[OfferEvent]("offers")
-  def balanceChanges: Dataset[BalanceChange] = project[BalanceChange]("balanceChanges")
-  def payments: Dataset[Payment] = project[Payment]("payments")
-  def accountsCreated: Dataset[AccountCreated] = project[AccountCreated]("accountsCreated")
-  def affectedAccounts: Dataset[AffectedAccount] = project[AffectedAccount]("affectedAccounts")
-  def memos: Dataset[MemoRow] = project[MemoRow]("memos")
-  def escrows: Dataset[EscrowRow] = project[EscrowRow]("escrows")
-  def paychans: Dataset[PayChanRow] = project[PayChanRow]("paychans")
-  def feeSummaries: Dataset[FeeSummary] = project[FeeSummary]("feeSummary")
+  lazy val ledgers: Dataset[LedgerRow] = project[LedgerRow]("ledger")
+  lazy val transactions: Dataset[TransactionRow] = project[TransactionRow]("transactions")
+  lazy val exchanges: Dataset[Exchange] = project[Exchange]("exchanges")
+  lazy val offers: Dataset[OfferEvent] = project[OfferEvent]("offers")
+  lazy val balanceChanges: Dataset[BalanceChange] = project[BalanceChange]("balanceChanges")
+  lazy val payments: Dataset[Payment] = project[Payment]("payments")
+  lazy val accountsCreated: Dataset[AccountCreated] = project[AccountCreated]("accountsCreated")
+  lazy val affectedAccounts: Dataset[AffectedAccount] =
+    project[AffectedAccount]("affectedAccounts")
+  lazy val memos: Dataset[MemoRow] = project[MemoRow]("memos")
+  lazy val escrows: Dataset[EscrowRow] = project[EscrowRow]("escrows")
+  lazy val paychans: Dataset[PayChanRow] = project[PayChanRow]("paychans")
+  lazy val feeSummaries: Dataset[FeeSummary] = project[FeeSummary]("feeSummary")
 }
 
 object XrplTables {
+
+  /** The fields of struct column `r` as the columns of `T`, with the
+    * encoder's nullability: `explode` marks every field of an array
+    * element nullable, so the non-nullable ones are re-asserted. */
+  private[xrpl] def fieldsOf[T <: Product : TypeTag](r: Column): Seq[Column] =
+    Encoders.product[T].schema.fields.toSeq.map { f =>
+      val c = r.getField(f.name)
+      (if (f.nullable) c else column(KnownNotNull(expression(c)))).as(f.name)
+    }
 
   /** The bundled reference mock-ledger fixtures. `sbt run` packages
     * resources into a jar (not a readable directory for

@@ -33,10 +33,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale: both state tables are one hash aggregate over the change
   * log, keyed by (account, …) — uniform keys, map-side combinable. A
-  * deployment keeps them incrementally maintained (the
-  * DaemonStream stage-and-rebuild shape) or as a compacted
-  * merge-on-read view; point lookups then hit the store's account
-  * partitioning.
+  * deployment keeps them incrementally maintained
+  * (`DaemonStream.liveStateDaemon`: each micro-batch's partial state
+  * is reduced with the previous batch's state by
+  * `IncrementalDaemon.step`, so the state is bounded by live keys,
+  * not by history) or as a compacted merge-on-read view; point
+  * lookups then hit the store's account partitioning.
   */
 object LiveState {
 

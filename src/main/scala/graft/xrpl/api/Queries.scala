@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.xrpl.XrplTables
+import graft.xrpl.{TransactionRow, XrplTables}
 import graft.xrpl.agg.Candles
 
 /** The Data API v2 query layer: one typed function per reference
@@ -26,13 +26,26 @@ object Queries {
       descending: Boolean = false,
       limit: Int = 200)
 
-  private def timeFilter(df: DataFrame, timeCol: String, o: RangeOpts): DataFrame = {
-    val withStart = o.start.map(s => df.filter(col(timeCol) >= s)).getOrElse(df)
-    o.end.map(e => withStart.filter(col(timeCol) <= e)).getOrElse(withStart)
-  }
+  private def timeFilter(df: DataFrame, timeCol: String, o: RangeOpts): DataFrame =
+    (o.start.map(col(timeCol) >= _) ++ o.end.map(col(timeCol) <= _)).foldLeft(df)(_ filter _)
 
   private def pageOrder(o: RangeOpts, keys: Column*): Seq[Column] =
     if (o.descending) keys.map(_.desc) else keys
+
+  /** The rows whose (`curCol`, `issCol`) leg is `p`; XRP has no issuer. */
+  private def legEq(curCol: String, issCol: String, p: Pair): Column =
+    col(curCol) === p.currency &&
+      p.issuer.map(col(issCol) === _).getOrElse(col(issCol).isNull)
+
+  /** Whether the pair inverts under the canonical key order
+    * (data.js:1656-1663), and the exchanges of the canonical pair. */
+  private def canonicalPair(exchanges: DataFrame, base: Pair,
+      counter: Pair): (Boolean, DataFrame) = {
+    val invert = counter.key.toLowerCase <= base.key.toLowerCase
+    val (b, c) = if (invert) (counter, base) else (base, counter)
+    (invert, exchanges.filter(legEq("base_currency", "base_issuer", b) &&
+      legEq("counter_currency", "counter_issuer", c)))
+  }
 
   // -----------------------------------------------------------------
   // GET /v2/exchanges/:base/:counter — data.js:1463-1750
@@ -46,19 +59,9 @@ object Queries {
     */
   def exchangePairRows(exchanges: DataFrame, base: Pair, counter: Pair,
       opts: RangeOpts = RangeOpts(), autobridgedOnly: Boolean = false): DataFrame = {
-    // canonical key order (data.js:1656-1663)
-    val invert = counter.key.toLowerCase <= base.key.toLowerCase
-    val (b, c) = if (invert) (counter, base) else (base, counter)
-
-    def legEq(curCol: String, issCol: String, p: Pair): Column =
-      col(curCol) === p.currency &&
-        p.issuer.map(col(issCol) === _).getOrElse(col(issCol).isNull)
-
-    var df = exchanges.filter(
-      legEq("base_currency", "base_issuer", b) &&
-        legEq("counter_currency", "counter_issuer", c))
-    if (autobridgedOnly) df = df.filter(col("autobridged_currency").isNotNull)
-    df = timeFilter(df, "time", opts)
+    val (invert, pairEx) = canonicalPair(exchanges, base, counter)
+    val df = timeFilter(if (!autobridgedOnly) pairEx
+      else pairEx.filter(col("autobridged_currency").isNotNull), "time", opts)
 
     val rate = col("rate").cast("double")
     val baseD = col("base_amount").cast("double")
@@ -118,10 +121,6 @@ object Queries {
   def getAccountExchanges(exchanges: DataFrame, account: String,
       base: Option[Pair] = None, counter: Option[Pair] = None,
       opts: RangeOpts = RangeOpts()): DataFrame = {
-    def legEq(curCol: String, issCol: String, p: Pair): Column =
-      col(curCol) === p.currency &&
-        p.issuer.map(col(issCol) === _).getOrElse(col(issCol).isNull)
-
     var df = exchanges.filter(col("buyer") === account || col("seller") === account)
     base.foreach(p => df = df.filter(legEq("base_currency", "base_issuer", p)))
     counter.foreach(p => df = df.filter(legEq("counter_currency", "counter_issuer", p)))
@@ -142,16 +141,7 @@ object Queries {
   def exchangePairCandles(exchanges: DataFrame, base: Pair, counter: Pair,
       interval: String, opts: RangeOpts = RangeOpts(limit = 400)): DataFrame = {
     require(Candles.intervals.exists(_._1 == interval), s"invalid interval: $interval")
-    val invert = counter.key.toLowerCase <= base.key.toLowerCase
-    val (b, c) = if (invert) (counter, base) else (base, counter)
-
-    def legEq(curCol: String, issCol: String, p: Pair): Column =
-      col(curCol) === p.currency &&
-        p.issuer.map(col(issCol) === _).getOrElse(col(issCol).isNull)
-
-    val pairEx = exchanges.filter(
-      legEq("base_currency", "base_issuer", b) &&
-        legEq("counter_currency", "counter_issuer", c))
+    val (invert, pairEx) = canonicalPair(exchanges, base, counter)
     val (_, multiple, unit) = Candles.intervals.find(_._1 == interval).get
     val candles0 = timeFilter(
       Candles.fromExchanges(pairEx, unit, multiple), "start", opts)
@@ -261,23 +251,31 @@ object Queries {
   // -----------------------------------------------------------------
   // GET /v2/accounts/:address/transactions — data.js:1172-1246 (J1)
   // -----------------------------------------------------------------
+  /** The reference scans the affected-account index, then multigets
+    * the page's transactions. Here a transaction and its
+    * affected-account rows share one bundle row, so that join is a
+    * nested per-ledger filter: keep the ledgers with a matching
+    * affected-account element, explode their transactions, keep those
+    * a matching element of the same row names by `tx_hash`, take the
+    * page. One job, no exchange. Same page: `TxParsers.affectedAccounts`
+    * emits an account at most once per transaction, with the
+    * transaction's own time, ledger_index and tx_index.
+    */
   def getAccountTransactions(t: XrplTables, account: String,
       opts: RangeOpts = RangeOpts(limit = 20),
       txType: Option[String] = None, txResult: Option[String] = None): DataFrame = {
-    var idx = t.affectedAccounts.toDF().filter(col("account") === account)
-    txType.foreach(v => idx = idx.filter(col("tx_type") === v))
-    txResult.foreach(v => idx = idx.filter(col("tx_result") === v))
-    idx = timeFilter(idx, "time", opts)
-    val page = idx
-      .select(col("tx_hash"), col("time"), col("ledger_index").as("li"),
-        col("tx_index").as("ti"))
-      .orderBy(pageOrder(opts, col("time"), col("li"), col("ti")): _*)
-      .limit(opts.limit)
-    // index page → detail fetch: broadcast the page of hashes (J1)
-    t.transactions.toDF()
-      .join(broadcast(page.select(col("tx_hash"))), Seq("tx_hash"))
+    def hit(a: Column): Column = (Seq(a("account") === account) ++
+      txType.map(a("tx_type") === _) ++ txResult.map(a("tx_result") === _) ++
+      opts.start.map(a("time") >= _) ++ opts.end.map(a("time") <= _)).reduce(_ && _)
+    t.cached.toDF()
+      .filter(exists(col("affectedAccounts"), hit))
+      .select(explode(col("transactions")).as("tx"), col("affectedAccounts"))
+      .filter(exists(col("affectedAccounts"),
+        a => hit(a) && a("tx_hash") === col("tx.tx_hash")))
+      .select(XrplTables.fieldsOf[TransactionRow](col("tx")): _*)
       .orderBy(pageOrder(opts, col("executed_time"), col("ledger_index"),
         col("tx_index")): _*)
+      .limit(opts.limit)
   }
 
   /** Sequence-range variant (lu_account_transactions, data.js:1147-1166). */
@@ -291,8 +289,9 @@ object Queries {
   // -----------------------------------------------------------------
   // GET /v2/ledgers[/:id] — data.js:1856-1977 (J2)
   // -----------------------------------------------------------------
+  // compared as text: codegen inlines a Long literal (a class per index), not a string
   def getLedgerByIndex(t: XrplTables, index: Long): DataFrame =
-    t.ledgers.toDF().filter(col("ledger_index") === index)
+    t.ledgers.toDF().filter(col("ledger_index").cast("string") === index.toString)
 
   def getLedgerByHash(t: XrplTables, hash: String): DataFrame =
     t.ledgers.toDF().filter(col("ledger_hash") === hash)

@@ -637,4 +637,57 @@ class PlanShapeSpec extends AnyFunSuite {
       s"the repeated request compiled ${compiles - c1} classes again")
     t.cached.unpersist()
   }
+
+  test("codegen: a ledger lookup by another index compiles no new class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val t = XrplTables.fromFiles(spark, XrplTables.fixturesPath)
+    t.cached.count()
+    val indexes = t.ledgers.collect().map(_.ledger_index).take(3)
+    def request(i: Long) = graft.xrpl.api.Queries.getLedgerByIndex(t, i).collect()
+    assert(request(indexes(0)).map(_.getAs[Long]("ledger_index")).toSeq == Seq(indexes(0)))
+    val c0 = compiles
+    indexes.tail.foreach(i =>
+      assert(request(i).map(_.getAs[Long]("ledger_index")).toSeq == Seq(i)))
+    assert(compiles == c0, s"two more lookups compiled ${compiles - c0} classes")
+    t.cached.unpersist()
+  }
+
+  test("Data-API: a bundle-backed request runs one job and no exchange") {
+    // the nested bundle answers each of these without a join or a
+    // shuffle, so AQE has no stage to split and nothing to broadcast
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.GraftListenerBridge.drainListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.xrpl.api.Queries
+    val t = XrplTables.fromFiles(spark, XrplTables.fixturesPath)
+    t.cached.count() // the requests then read a built cache
+    val tx = t.transactions.head()
+    val pay = t.payments.head()
+    val requests = Seq(
+      "getAccountTransactions" ->
+        Queries.getAccountTransactions(t, t.affectedAccounts.head().account),
+      "getAccountPayments" -> Queries.getAccountPayments(t, pay.source),
+      "getBalanceChanges" -> Queries.getBalanceChanges(t, t.balanceChanges.head().account),
+      "getLedgerByIndex" -> Queries.getLedgerByIndex(t, tx.ledger_index),
+      "getTransactionByHash" -> Queries.getTransactionByHash(t, tx.tx_hash),
+      "getPayments" -> Queries.getPayments(t, Some(Queries.Pair(pay.currency, pay.issuer))))
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try requests.foreach { case (name, df) =>
+      drainListenerBus(sc, 10000)
+      jobs.set(0)
+      assert(df.collect().nonEmpty, s"$name: no rows")
+      drainListenerBus(sc, 10000)
+      assert(jobs.get === 1, s"$name: ${jobs.get} jobs")
+      val exchanges = SparkTest.execNodes(df).collect { case e: Exchange => e.nodeName }
+      assert(exchanges.isEmpty, s"$name plans $exchanges")
+    } finally sc.removeSparkListener(listener)
+    t.cached.unpersist()
+  }
 }

@@ -1,5 +1,6 @@
 package graft.xrpl
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -75,6 +76,60 @@ class QueriesSpec extends AnyFunSuite {
       RangeOpts(limit = 100)).collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getAs[String]("tx_hash").length == 64))
+
+    // the nested per-ledger filter answers what the reference's index
+    // page → detail join answers (data.js:1172-1246), row for row
+    def indexJoin(account: String, o: RangeOpts, txType: Option[String],
+        txResult: Option[String]) = {
+      def order(keys: Column*) = if (o.descending) keys.map(_.desc) else keys
+      var idx = tables.affectedAccounts.toDF().filter(col("account") === account)
+      txType.foreach(v => idx = idx.filter(col("tx_type") === v))
+      txResult.foreach(v => idx = idx.filter(col("tx_result") === v))
+      o.start.foreach(s => idx = idx.filter(col("time") >= s))
+      o.end.foreach(e => idx = idx.filter(col("time") <= e))
+      val page = idx
+        .select(col("tx_hash"), col("time"), col("ledger_index").as("li"),
+          col("tx_index").as("ti"))
+        .orderBy(order(col("time"), col("li"), col("ti")): _*)
+        .limit(o.limit)
+      tables.transactions.toDF()
+        .join(broadcast(page.select(col("tx_hash"))), Seq("tx_hash"))
+        .orderBy(order(col("executed_time"), col("ledger_index"), col("tx_index")): _*)
+    }
+    val index = tables.affectedAccounts.collect().groupBy(_.account)
+    val times = index.values.flatten.map(_.time)
+    val (lo, hi) = (times.min, times.max)
+    val inner = RangeOpts(Some(lo + (hi - lo) / 4), Some(hi - (hi - lo) / 4))
+    assert(times.exists(_ < inner.start.get) && times.exists(_ > inner.end.get))
+    // every order × limit × filter × window combination
+    val combos = for (desc <- Seq(false, true); limit <- Seq(1, 20, 100);
+        window <- Seq(RangeOpts(), inner); filtered <- Seq(false, true))
+      yield (window.copy(descending = desc, limit = limit), filtered)
+    def check(account: String, combo: (RangeOpts, Boolean)): Unit = {
+      val (o, filtered) = combo
+      val first = index(account).head
+      val (txType, txResult) =
+        if (filtered) (Some(first.tx_type), Some(first.tx_result)) else (None, None)
+      val got = Queries.getAccountTransactions(tables, account, o, txType, txResult)
+      val want = indexJoin(account, o, txType, txResult)
+      assert(got.schema === want.schema)
+      assert(got.collect().toSeq === want.collect().toSeq,
+        s"$account $o $txType $txResult")
+    }
+    // every account with one combination in turn; the accounts with the
+    // longest histories (where limits cut inside) with every combination
+    val accounts = index.keys.toSeq.sorted
+    val requests = accounts.zipWithIndex.map { case (a, i) => (a, combos(i % combos.size)) } ++
+      accounts.sortBy(a => -index(a).length).take(6).flatMap(a => combos.map((a, _)))
+    // independent requests, four at a time
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      implicit val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
+      val all = scala.concurrent.Future.traverse(requests) { case (a, c) =>
+        scala.concurrent.Future(check(a, c))
+      }
+      scala.concurrent.Await.result(all, scala.concurrent.duration.Duration.Inf)
+    } finally pool.shutdown()
   }
 
   test("getLedger by index / hash / latest (test.ledgers.js)") {

@@ -44,4 +44,24 @@ class XrplTablesSpec extends AnyFunSuite {
   projection[EscrowRow]("escrows")(_.escrows, _.flatMap(_.escrows))
   projection[PayChanRow]("paychans")(_.paychans, _.flatMap(_.paychans))
   projection[FeeSummary]("feeSummaries")(_.feeSummaries, _.map(_.feeSummary))
+
+  test("projections are memoized: one Dataset per accessor") {
+    def same[T <: Product : TypeTag](name: String, get: XrplTables => Dataset[T]): Unit = {
+      val first = get(tables)
+      assert(get(tables) eq first, s"$name built a new Dataset on a repeated call")
+      assert(first.schema === Encoders.product[T].schema, name)
+    }
+    same[LedgerRow]("ledgers", _.ledgers)
+    same[TransactionRow]("transactions", _.transactions)
+    same[Exchange]("exchanges", _.exchanges)
+    same[OfferEvent]("offers", _.offers)
+    same[BalanceChange]("balanceChanges", _.balanceChanges)
+    same[Payment]("payments", _.payments)
+    same[AccountCreated]("accountsCreated", _.accountsCreated)
+    same[AffectedAccount]("affectedAccounts", _.affectedAccounts)
+    same[MemoRow]("memos", _.memos)
+    same[EscrowRow]("escrows", _.escrows)
+    same[PayChanRow]("paychans", _.paychans)
+    same[FeeSummary]("feeSummaries", _.feeSummaries)
+  }
 }
