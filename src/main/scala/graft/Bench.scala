@@ -1,5 +1,9 @@
 package graft
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.GraftListenerBridge
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Benchmark main: times every registered query at the target scale
   * factor and prints one JSON line.
@@ -111,10 +115,24 @@ object Bench {
     // cache too small for the working set shows in every artifact
     var compiles = 0L
     def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // Spark jobs launched during the timed reps (env.jobs), counted by a
+    // listener and read after a listener-bus drain outside the timed
+    // interval, so a late-delivered job start is not lost
+    var jobs = 0L
+    val jobStarts = new AtomicLong(0)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobStarts.incrementAndGet()
+    })
+    def jobCount: Long = {
+      GraftListenerBridge.drainListenerBus(spark.sparkContext, 10000)
+      jobStarts.get
+    }
     // `reps` timed evaluations of `name`, each in seconds, negated if
     // it failed
     def timedReps(name: String, what: String): Seq[Double] =
       (1 to reps).map { _ =>
+        val j0 = jobCount
         val c0 = compileCount
         val t0 = System.nanoTime()
         val ok = try { evalFull(name); true } catch {
@@ -124,6 +142,7 @@ object Bench {
         }
         val dt = (System.nanoTime() - t0) / 1e9
         compiles += compileCount - c0
+        jobs += jobCount - j0
         if (ok) dt else -dt
       }
     // a failing query must NOT read as a fast success: its elapsed
@@ -288,7 +307,7 @@ object Bench {
         spark.conf.get("spark.sql.shuffle.partitions")}","jvm_max_heap_mb":${
         rt.maxMemory() / (1024 * 1024)},"jvm_available_processors":${
         rt.availableProcessors()},"reps":$reps,"codegen":{"cache_max_entries":${
-        spark.conf.get("spark.sql.codegen.cache.maxEntries")},"compiles":$compiles},"machine":$machineJson}"""
+        spark.conf.get("spark.sql.codegen.cache.maxEntries")},"compiles":$compiles},"jobs":$jobs,"machine":$machineJson}"""
     }
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repsJson,"errors":$errs,"suspect":$suspectJson,"rep_spread":$repSpreadJson,"spread_probe":$spreadProbeJson,"env":$envJson,"sf":"$sfDir"}"""

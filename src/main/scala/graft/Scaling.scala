@@ -240,7 +240,7 @@ object Scaling {
       if (n > 64000L) writeScalingCorpus(spark, dir, n)
       // per-block df histogram → UNCLAMPED P99.9 (the raw quantile,
       // to watch the floor handover) + the operator's clamped cap
-      val dfc = spark.read.parquet(s"$dir/documents.parquet")
+      val dfc = Tables(spark, dir, "documents")
         .selectExpr("'en' AS lang", "source",
           """explode(array_distinct(transform(
             |  sequence(1, size(split(text, ' ')) - 2),
@@ -300,7 +300,7 @@ object Scaling {
     for (n <- Seq(4000L, 16000L, 64000L)) {
       val dir = s"target/scaling_corpus/v60_n$n"
       writeScalingCorpus(spark, dir, n, vocab = 60)
-      val dfc = spark.read.parquet(s"$dir/documents.parquet")
+      val dfc = Tables(spark, dir, "documents")
         .selectExpr("'en' AS lang", "source",
           """explode(array_distinct(transform(
             |  sequence(1, size(split(text, ' ')) - 2),

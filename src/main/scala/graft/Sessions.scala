@@ -19,12 +19,18 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session zone: the events-loader contract (Tables.events
   *    asserts it loudly);
   *  - generated-class cache of 1000 entries (Spark's default is
-  *    100), so a query shape compiles once per JVM: one `gate_batch`
+  *    100), so a query shape's classes stay compiled: one `gate_batch`
   *    rep of five gates generates about 223 distinct classes, and a
   *    Data-API workload about 360 including its ingest, so at 100
   *    every evaluation evicted the classes the next one needed and
   *    Janino compiled them again (489 compiles in 8.6 s of a 22.3 s
   *    timed gate phase).
+  *    A new source still compiles twice in local mode: Spark 4.1.2
+  *    keys the cache by (thread context class loader, source), and
+  *    the first task thread carries the executor's class loader, so
+  *    a new shape compiles once when the driver plans it (`toRdd`)
+  *    and once more at its first action; a repeat, or a new DataFrame
+  *    of the same shape, compiles nothing.
   *    The cache only decides whether identical generated source is
   *    compiled again, so results cannot change. It is JVM-global and
   *    sized once, from the active session's conf, when code is first

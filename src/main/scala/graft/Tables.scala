@@ -1,13 +1,34 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros, to_timestamp_ltz}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Loader for the driver-generated parquet tables (see TESTDATA.md).
   * One parquet file per table; Catalyst handles column pruning and
   * predicate pushdown into the scan, so every query should read only
   * the columns/row-groups it needs.
+  *
+  * Every read carries a schema resolved once per file version
+  * ([[parquet]]). A `spark.read.parquet` without a schema launches a
+  * schema-inference job on every call; gates read several tables per
+  * evaluation, and those jobs were more than half of a gate's
+  * construction time. The memo is JVM-wide and keyed by the
+  * qualified path. An entry holds the schema and a stamp: the (name,
+  * length, modification time) of every leaf file under the path, from
+  * one recursive listing, plus the session's values of the confs that
+  * change what inference returns ([[InferenceConfs]]). A read whose
+  * stamp differs (the files were rewritten, or a conf changed) infers
+  * again and replaces the entry. The schema must be exactly the one
+  * inference returns: a hand-written one could differ in a type,
+  * nullability or field metadata, which would change results, and the
+  * plan-keyed persisted memos (`SimilarityOps.signatures`,
+  * `TpchFull.partsupp`, …) would stop matching across reads that
+  * carry different schemas.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +36,50 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Session confs that parquet schema inference depends on. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
+
+  private final case class Stamp(
+      files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** The parquet dataset (a file or a directory) at `path`, read with
+    * the schema inference gives for its current files; see the object
+    * doc. A missing path stamps as no files, so it never hits and
+    * inference raises Spark's own error.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = try {
+      val it = fs.listFiles(p, true)
+      val b = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      b.result().sorted
+    } catch { case _: FileNotFoundException => Seq.empty }
+    val stamp = Stamp(files, InferenceConfs.map(spark.conf.getOption))
+    val key = fs.makeQualified(p).toString
+    val schema = Option(schemas.get(key)) match {
+      case Some((s, schema)) if s == stamp => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        schemas.put(key, (stamp, schema))
+        schema
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** The `events` table with `ts` normalized to TIMESTAMP (LTZ).
     *

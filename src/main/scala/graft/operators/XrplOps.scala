@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QuerySpec
+import graft.{QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -152,7 +152,7 @@ object XrplOps {
 
   private def pq(s: SparkSession, name: String): DataFrame = {
     prepare(s)
-    s.read.parquet(s"$DumpDir/$name")
+    Tables.parquet(s, s"$DumpDir/$name")
   }
 
   @volatile private var liveStorePrepared = false
@@ -1676,14 +1676,14 @@ object XrplOps {
     QuerySpec.sql(
       "xrpl_live_balances_store", liveBalancesSql) { (s, _) =>
       prepareLiveStore(s)
-      s.read.parquet(s"$DumpDir/live/store/live_balances")
+      Tables.parquet(s, s"$DumpDir/live/store/live_balances")
         .orderBy(col("account"), col("currency"), col("counterparty"))
     },
 
     QuerySpec.sql(
       "xrpl_open_offers_store", openOffersSql) { (s, _) =>
       prepareLiveStore(s)
-      s.read.parquet(s"$DumpDir/live/store/open_offers")
+      Tables.parquet(s, s"$DumpDir/live/store/open_offers")
         .orderBy(col("account"), col("offer_sequence"))
     })
 

@@ -2,10 +2,11 @@ package org.apache.spark
 
 /** Package-private bridge (the [[org.apache.spark.sql.GraftPlanBridge]]
   * pattern one level up): exposes the listener-bus drain that
-  * measurement tooling needs — `SparkContext.listenerBus` is
-  * private[spark], and sampling listener-updated counters without a
-  * drain attributes late-delivered Stage/JobEnd events to the wrong
-  * gate (r16 ADVICE on ProfileGates).
+  * measurement needs — `SparkContext.listenerBus` is private[spark],
+  * and sampling listener-updated counters without a drain attributes
+  * late-delivered job and stage events to the wrong interval
+  * (`graft.Bench`'s `env.jobs`, the job-count cases of
+  * `PlanShapeSpec`).
   */
 object GraftListenerBridge {
   /** Block until the async listener bus has delivered every queued

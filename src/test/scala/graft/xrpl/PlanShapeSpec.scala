@@ -45,6 +45,27 @@ class PlanShapeSpec extends AnyFunSuite {
   private def planString(name: String): String =
     collectNodes(planOf(name)).map(_.toString).mkString("\n")
 
+  /** Spark jobs launched while `body` runs, counted by a listener
+    * after a listener-bus drain on both sides.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.GraftListenerBridge.drainListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    drainListenerBus(sc, 10000)
+    sc.addSparkListener(listener)
+    try {
+      body
+      drainListenerBus(sc, 10000)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("no unpartitioned window in any relational/time-series gate plan") {
     for (name <- Seq("skyline_orders", "ts_ewma", "ts_rolling_median",
         "w7_rank_distribution", "w8_value_windows", "a_mode_per_user",
@@ -656,9 +677,6 @@ class PlanShapeSpec extends AnyFunSuite {
   test("Data-API: a bundle-backed request runs one job and no exchange") {
     // the nested bundle answers each of these without a join or a
     // shuffle, so AQE has no stage to split and nothing to broadcast
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.GraftListenerBridge.drainListenerBus
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.exchange.Exchange
     import graft.xrpl.api.Queries
     val t = XrplTables.fromFiles(spark, XrplTables.fixturesPath)
@@ -673,21 +691,96 @@ class PlanShapeSpec extends AnyFunSuite {
       "getLedgerByIndex" -> Queries.getLedgerByIndex(t, tx.ledger_index),
       "getTransactionByHash" -> Queries.getTransactionByHash(t, tx.tx_hash),
       "getPayments" -> Queries.getPayments(t, Some(Queries.Pair(pay.currency, pay.issuer))))
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try requests.foreach { case (name, df) =>
-      drainListenerBus(sc, 10000)
-      jobs.set(0)
-      assert(df.collect().nonEmpty, s"$name: no rows")
-      drainListenerBus(sc, 10000)
-      assert(jobs.get === 1, s"$name: ${jobs.get} jobs")
+    requests.foreach { case (name, df) =>
+      val jobs = jobsDuring(assert(df.collect().nonEmpty, s"$name: no rows"))
+      assert(jobs === 1, s"$name: $jobs jobs")
       val exchanges = SparkTest.execNodes(df).collect { case e: Exchange => e.nodeName }
       assert(exchanges.isEmpty, s"$name plans $exchanges")
-    } finally sc.removeSparkListener(listener)
+    }
     t.cached.unpersist()
+  }
+
+  test("Tables: every table reads with the schema inference gives") {
+    // the memoized schema must be exactly the inferred one, or results
+    // and plan-keyed cache entries would change with it
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    def inferred(name: String) = spark.read.parquet(s"$dir/$name.parquet").schema
+    graft.Tables.events(spark, dir) // sets the conf every event read runs under
+    for (name <- graft.Tables.names)
+      assert(graft.Tables(spark, dir, name).schema == inferred(name), name)
+    // a conf that inference depends on is part of the memo's stamp:
+    // events.ts is TIMESTAMP(MICROS) without the UTC-adjusted flag
+    val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val prev = spark.conf.getOption(ntz)
+    spark.conf.set(ntz, "false")
+    try {
+      val ev = graft.Tables(spark, dir, "events").schema
+      assert(ev == inferred("events"))
+      assert(ev("ts").dataType == TimestampType)
+    } finally prev.fold(spark.conf.unset(ntz))(spark.conf.set(ntz, _))
+    assert(graft.Tables(spark, dir, "events").schema("ts").dataType ==
+      TimestampNTZType)
+  }
+
+  test("Tables: a rewritten file or directory reads with its new schema") {
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    import org.apache.spark.sql.{DataFrame, Row}
+    val tmp = Files.createTempDirectory("graft-tables")
+    val session = spark
+    import session.implicits._
+    def check(path: String, df: DataFrame, rows: Seq[Row]): Unit = {
+      val read = graft.Tables.parquet(spark, path)
+      assert(read.schema == spark.read.parquet(path).schema)
+      assert(read.schema.fieldNames.toSeq == df.schema.fieldNames.toSeq)
+      assert(read.collect().toSeq == rows)
+    }
+    val a = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    val aRows = Seq(Row(1L, "a"), Row(2L, "b"))
+    val b = Seq((3.5, 7, true)).toDF("x", "y", "z")
+    val bRows = Seq(Row(3.5, 7, true))
+    try {
+      // a Spark-written directory, overwritten in place
+      val written = tmp.resolve("dir.parquet").toString
+      a.coalesce(1).write.parquet(written)
+      check(written, a, aRows)
+      b.coalesce(1).write.mode("overwrite").parquet(written)
+      check(written, b, bRows)
+      // a single file, replaced by one of another schema
+      val file = tmp.resolve("file.parquet")
+      def writeFile(df: DataFrame): Unit = {
+        val out = tmp.resolve("staging")
+        df.coalesce(1).write.mode("overwrite").parquet(out.toString)
+        val part = Files.list(out).filter(p =>
+          p.getFileName.toString.matches("part-.*\\.parquet")).findFirst.get
+        Files.move(part, file, StandardCopyOption.REPLACE_EXISTING)
+      }
+      writeFile(a)
+      check(file.toString, a, aRows)
+      writeFile(b)
+      check(file.toString, b, bRows)
+    } finally Files.walk(tmp).sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))
+  }
+
+  test("gate construction launches no job once its tables were read") {
+    // every table read carries its memoized schema, so building q9's
+    // DataFrame (six table reads) starts no schema-inference job
+    val q9 = SparkEntry.queries("q9_product_profit")
+    q9(spark, dir).write.mode("overwrite").format("noop").save()
+    val jobs = jobsDuring(q9(spark, dir))
+    assert(jobs == 0, s"building q9_product_profit launched $jobs jobs")
+  }
+
+  test("a plan-keyed persisted memo built twice is one cache entry") {
+    import org.apache.spark.sql.execution.CachedData
+    val a = graft.operators.SimilarityOps.signatures(spark, dir)
+    val b = graft.operators.SimilarityOps.signatures(spark, dir)
+    val cm = spark.sharedState.cacheManager
+    val field = cm.getClass.getDeclaredField("cachedData")
+    field.setAccessible(true)
+    val entries = field.get(cm).asInstanceOf[IndexedSeq[CachedData]]
+      .filter(e => Seq(a, b).exists(_.queryExecution.analyzed.sameResult(e.plan)))
+    assert(entries.size == 1, s"${entries.size} cache entries for signatures")
+    a.unpersist()
   }
 }
