@@ -47,9 +47,13 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // exchange reuse is Spark's default; pinned explicitly because
-      // several multi-consumer plans (shared signature caches, the
-      // cumsum fan-out gates) count on one materialization per
-      // identical exchange for their cost claims in PLANS.md
+      // multi-consumer plans over table reads (the cumsum fan-out
+      // gates) count on one materialization per identical exchange
+      // for their cost claims in PLANS.md. Under AQE (Spark 4.1.2)
+      // it never fires above a persisted memo, likely because the
+      // cached-table query stage keeps its id in the canonical form
+      // of every exchange over it: consumers of a shared signature
+      // cache share the memo, not the exchanges above it
       .config("spark.sql.exchange.reuse", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -230,6 +230,7 @@ object PqOps {
 
   /** ADC coarse top-[[PqCand]] per query (custom top-k plan, no
     * window), exact full-precision cosine rerank over only those.
+    * Rows unsorted, like [[SimilarityOps.rankTop5]]'s.
     */
   private def rerankExact(s: SparkSession, dir: String,
       scored: DataFrame): DataFrame = {
@@ -432,6 +433,7 @@ object PqOps {
     // exact cosine over the surviving PqCand only.
     QuerySpec.sql("sim_pq_rerank", rerankSql) { (s, dir) =>
       pqRerank(s, dir)
+        .orderBy(col("qid"), col("rnk"))
     },
 
     // Recall@5 of the PQ search vs brute force, self-measured in-plan
@@ -465,6 +467,7 @@ object PqOps {
     // halves are the already-gated operators composed in one plan.
     QuerySpec.sql("sim_ivfpq_rerank", ivfpqRerankSql) { (s, dir) =>
       ivfpqRerank(s, dir)
+        .orderBy(col("qid"), col("rnk"))
     },
 
     // Recall@5 of the composed index vs brute force: measures the

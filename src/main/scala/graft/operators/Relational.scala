@@ -2370,8 +2370,8 @@ object Relational {
     // baskets: directed i→j rules with support ≥ 2, scored by
     // confidence (cooc/n_antecedent) and lift (cooc·N/(n_i·n_j)),
     // both exact integer ppm. Pairs come from the basket arrays
-    // (support filter applied at the pair aggregate, BEFORE the
-    // direction union doubles rows); the per-part counts and the
+    // (support filter applied at the pair aggregate, BEFORE each pair
+    // explodes into its two directions); the per-part counts and the
     // 1-row basket total broadcast back. Top-20 under the total
     // (confidence, ant, cons) order — TakeOrderedAndProject.
     QuerySpec.sql(
@@ -2410,9 +2410,13 @@ object Relational {
       val n = bk.select(explode(col("parts")).as("l_partkey"))
         .groupBy(col("l_partkey")).agg(count(lit(1)).as("n"))
       val nb = bk.agg(count(lit(1)).as("n_orders"))
-      pr.select(col("i").as("ant"), col("j").as("cons"), col("cooc"))
-        .unionAll(pr.select(col("j").as("ant"), col("i").as("cons"),
-          col("cooc")))
+      // both rule directions from the one pair aggregate (a union of
+      // two projections of `pr` ran its pair generation twice)
+      pr.select(explode(array(
+            struct(col("i").as("ant"), col("j").as("cons")),
+            struct(col("j").as("ant"), col("i").as("cons")))).as("d"),
+          col("cooc"))
+        .select(col("d.ant").as("ant"), col("d.cons").as("cons"), col("cooc"))
         .join(n.select(col("l_partkey").as("ant"), col("n").as("n_ant")),
           Seq("ant"))
         .join(n.select(col("l_partkey").as("cons"), col("n").as("n_cons")),

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QuerySpec, Tables}
 import graft.functions.DotProductLong.dot_long
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.TopKPerKey
@@ -131,15 +131,16 @@ object SimilarityOps {
     * shuffles and sorts every scored candidate per query; the custom
     * plan heap-reduces map-side to ≤k rows per query per partition
     * first, so the shuffle moves k·partitions rows per query
-    * regardless of corpus size. Rank is re-derived from the reduced
-    * set (bounded k-element array sort, no WindowExec anywhere).
+    * regardless of corpus size. Its final pass emits the rank (no
+    * WindowExec anywhere). Rows come back UNSORTED: most lists feed a
+    * join or an aggregate, where a global sort is a wasted range
+    * exchange, so only the gate that presents a list sorts it by
+    * (qid, rnk).
     */
   private[operators] def rankTop5(scored: DataFrame): DataFrame =
     TopKPerKey.topKRanked(
-        scored.select(col("qid"), col("vid"), col("cos")),
-        Seq("qid"), Seq("cos" -> true, "vid" -> false), 5, "rnk")
-      .select(col("qid"), col("vid"), col("cos"), col("rnk"))
-      .orderBy(col("qid"), col("rnk"))
+      scored.select(col("qid"), col("vid"), col("cos")),
+      Seq("qid"), Seq("cos" -> true, "vid" -> false), 5, "rnk")
 
   private[operators] def topk(s: SparkSession, dir: String, sameCell: Boolean): DataFrame = {
     val base = signatures(s, dir)
@@ -431,16 +432,24 @@ object SimilarityOps {
        |    ON a.label = b.label AND a.vec_id <> b.vec_id) t
        |WHERE rnk <= $k""".stripMargin
 
-  /** ±1 hyperplane components from md5(t:p:d) parity — the exact rule
-    * the oracle SQL spells out, replayed in the JVM so both engines
-    * hold the identical plane matrices with no RNG state.
+  /** ±1 plane component from md5 parity — the exact rule the oracle
+    * SQL spells out (the first hex digit of md5(`tag`) is even ⇒ +1),
+    * replayed in the JVM so both engines hold the identical plane
+    * matrices with no RNG state. That digit is the high nibble of the
+    * digest's first byte.
     */
-  private def lshPlanes(table: Int, planes: Int = LshPlanes,
-      dims: Int = 64): Array[Array[Long]] =
-    Array.tabulate(planes, dims) { (p, d) =>
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$table:$p:$d".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      if ("0123456789abcdef".indexOf(hex.charAt(0)) % 2 == 0) 1L else -1L
+  private def md5Sign(tag: String): Long = {
+    val b = java.security.MessageDigest.getInstance("MD5")
+      .digest(tag.getBytes("UTF-8"))(0)
+    if (((b >> 4) & 1) == 0) 1L else -1L
+  }
+
+  /** The [[LshTables]] × [[LshPlanes]] hyperplanes over 64 dims, one
+    * literal column per plane (md5(t:p:d) parity), built once per JVM.
+    */
+  private lazy val lshPlanes: Seq[Seq[Column]] =
+    Seq.tabulate(LshTables, LshPlanes) { (t, p) =>
+      typedLit(Seq.tabulate(64)(d => md5Sign(s"$t:$p:$d")))
     }
 
   /** (vec_id, t, bkt): one signed-projection bucket id per vector per
@@ -454,7 +463,7 @@ object SimilarityOps {
   private def lshBuckets(sig: DataFrame): DataFrame = {
     val tables = (0 until LshTables).map { t =>
       val bkt = lshPlanes(t).zipWithIndex.map { case (pl, p) =>
-        when(dot_long(col("qv"), typedLit(pl.toSeq)) > 0, lit(1L << p))
+        when(dot_long(col("qv"), pl) > 0, lit(1L << p))
           .otherwise(lit(0L))
       }.reduce(_ + _)
       struct(lit(t).as("t"), bkt.as("bkt"))
@@ -502,13 +511,11 @@ object SimilarityOps {
     * engines hold the identical dense projection matrix. Achlioptas-
     * style ±1 entries: the JL distance-preservation bound holds for
     * sign matrices, and the projection stays exact integer arithmetic.
+    * One literal column per output dim, built once per JVM.
     */
-  private def rpPlanes(dims: Int = 64): Array[Array[Long]] =
-    Array.tabulate(RpDims, dims) { (k, d) =>
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"rp:$k:$d".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      if ("0123456789abcdef".indexOf(hex.charAt(0)) % 2 == 0) 1L else -1L
-    }
+  private lazy val rpPlanes: Seq[Column] =
+    Seq.tabulate(RpDims)(k =>
+      typedLit(Seq.tabulate(64)(d => md5Sign(s"rp:$k:$d"))))
 
   /** (vec_id, rv: array<long>, rnorm2): the RpDims-dim projection of
     * each quantized vector plus its exact squared norm — a pure
@@ -520,8 +527,8 @@ object SimilarityOps {
     * fusion — the write-once reduced-dimension artifact at scale.
     */
   private def rpVectors(sig: DataFrame): DataFrame = {
-    val comps = rpPlanes().map(pl => dot_long(col("qv"), typedLit(pl.toSeq)))
-    sig.select(col("vec_id"), array(comps.toIndexedSeq: _*).as("rv"))
+    val comps = rpPlanes.map(pl => dot_long(col("qv"), pl))
+    sig.select(col("vec_id"), array(comps: _*).as("rv"))
       .withColumn("rnorm2", dot_long(col("rv"), col("rv")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
@@ -650,11 +657,13 @@ object SimilarityOps {
     // Brute-force exact top-k cosine — the ANN correctness baseline.
     QuerySpec.sql("sim_brute_topk", topkSql("")) { (s, dir) =>
       topk(s, dir, sameCell = false)
+        .orderBy(col("qid"), col("rnk"))
     },
 
     // IVF-style ANN: search only the query's coarse cell (label).
     QuerySpec.sql("sim_ivf_topk", topkSql("AND a.label = b.label")) { (s, dir) =>
       topk(s, dir, sameCell = true)
+        .orderBy(col("qid"), col("rnk"))
     },
 
     // Random-hyperplane MULTI-TABLE LSH ANN (the third index family
@@ -669,6 +678,7 @@ object SimilarityOps {
     // the coarse quantizer replaced by data-independent projections.
     QuerySpec.sql("sim_lsh_topk", lshSql) { (s, dir) =>
       lshTopk(s, dir)
+        .orderBy(col("qid"), col("rnk"))
     },
 
     // Embedding storage quantization: per-vector absmax int8 — the
@@ -941,6 +951,7 @@ object SimilarityOps {
         .withColumn("dot", dot_long(col("qa"), col("qb")))
         .withColumn("cos", expr(
           "CAST(dot AS DOUBLE) / (sqrt(CAST(q_norm2 AS DOUBLE)) * sqrt(CAST(c_norm2 AS DOUBLE)))")))
+        .orderBy(col("qid"), col("rnk"))
     },
 
     // IVF index-health profile — the cell-balance report an ANN
@@ -990,6 +1001,7 @@ object SimilarityOps {
     // both engines (sums stay < 2^53 — no float divergence anywhere).
     QuerySpec.sql("sim_ivf_probe", probeSql) { (s, dir) =>
       probeTopk(s, dir)
+        .orderBy(col("qid"), col("rnk"))
     },
 
     // Self-measuring ANN quality: recall@5 of the multi-probe IVF
@@ -1520,10 +1532,8 @@ object SimilarityOps {
          |$rpSqlCtes
          |SELECT vec_id, k, pv FROM rp
          |ORDER BY vec_id, k""".stripMargin) { (s, dir) =>
-      val planes = rpPlanes()
-      val comps = (0 until RpDims).map { k =>
-        struct(lit(k).cast("long").as("k"),
-          dot_long(col("qv"), typedLit(planes(k).toSeq)).as("pv"))
+      val comps = rpPlanes.zipWithIndex.map { case (pl, k) =>
+        struct(lit(k).cast("long").as("k"), dot_long(col("qv"), pl).as("pv"))
       }
       signatures(s, dir)
         .select(col("vec_id"), explode(array(comps: _*)).as("c"))
@@ -1645,6 +1655,7 @@ object SimilarityOps {
     // scores; candidate-norm-only division preserves per-query order.
     QuerySpec.sql("sim_rp_rerank", rpRerankSql) { (s, dir) =>
       rpRerank(s, dir)
+        .orderBy(col("qid"), col("rnk"))
     },
 
     // Self-measuring ANN quality for the projection family: recall@5
@@ -1685,7 +1696,11 @@ object SimilarityOps {
     // families outranks any single family's near-miss. Pure
     // composition over the three already-bounded searches: three
     // 5-row-per-query lists union → one hash aggregate → the custom
-    // top-k plan. No new scan of the corpus at any scale.
+    // top-k plan, which ranks in its final pass. The three lists come
+    // unsorted (Spark's EliminateSorts does not look through the
+    // union, so a sorted input would cost a range exchange each); the
+    // fused list is the only one sorted. No new scan of the corpus at
+    // any scale.
     QuerySpec.sql(
       "sim_rrf_fusion",
       s"""WITH ivf AS ($probeSql),
@@ -2023,6 +2038,7 @@ object SimilarityOps {
     // reached if any of its graph neighbors seeds.
     QuerySpec.sql("sim_graph_expand", graphExpandSql) { (s, dir) =>
       graphExpandTopk(s, dir)
+        .orderBy(col("qid"), col("rnk"))
     },
 
     // Recall@5 of the graph-expanded search vs exact brute force —

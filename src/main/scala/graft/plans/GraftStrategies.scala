@@ -19,9 +19,9 @@ object GraftStrategy extends SparkStrategy {
         excl, child) =>
       RangeScanExec(sortOrder, keyAttrs, valueAttrs, outAttrs, fold, excl,
         planLater(child)) :: Nil
-    case TopKPerKeyNode(keys, order, k, flushKeys, child) =>
-      TopKPerKeyExec(keys, order, k, partial = false, flushKeys,
-        TopKPerKeyExec(keys, order, k, partial = true, flushKeys,
+    case TopKPerKeyNode(keys, order, k, flushKeys, rank, child) =>
+      TopKPerKeyExec(keys, order, k, partial = false, flushKeys, rank,
+        TopKPerKeyExec(keys, order, k, partial = true, flushKeys, None,
           planLater(child))) :: Nil
     case _ => Nil
   }

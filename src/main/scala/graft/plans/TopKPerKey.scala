@@ -6,12 +6,15 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
-  Descending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
+  AttributeReference, AttributeSet, Descending, Expression,
+  GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
   Distribution, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.IntegerType
 
 /** Whole-operator custom plan: top-k rows per key WITHOUT a per-key
   * sort — the one SURVEY-preference-(c) operator the built-ins can't
@@ -29,7 +32,9 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   *    top-k);
   *  - **final pass** (requires [[ClusteredDistribution]] on the key,
   *    which EnsureRequirements satisfies with one hash shuffle):
-  *    merges the partial heaps to the exact per-key top-k.
+  *    merges the partial heaps to the exact per-key top-k and, for
+  *    [[TopKPerKey.topKRanked]], sorts each key's ≤ k rows with the
+  *    heap's ordering and emits their rank — no second operator.
   *
   * Heap comparisons use a codegen'd row ordering
   * ([[GenerateOrdering]]); per-partition memory is k rows per
@@ -58,15 +63,55 @@ object TopKPerKey {
   val DefaultPartialFlushKeys: Int = 1 << 16
 
   /** Top `k` rows per `keys` group, ordered by `order` — (column
-    * name, descending?) pairs, first k under that sort. The sort list
-    * is built as pure catalyst objects (no Column conversion: the
-    * Spark 4 converter leaves connect-internal node references inside
-    * the produced SortOrder, which are not task-serializable).
-    * Output columns = input columns; output order is unspecified
-    * (sort afterwards if needed).
+    * name, descending?) pairs, first k under that sort. Output columns
+    * = input columns; output order is unspecified (sort afterwards if
+    * needed).
     */
   def topK(df: DataFrame, keys: Seq[String], order: Seq[(String, Boolean)],
-      k: Int): DataFrame = {
+      k: Int): DataFrame = node(df, keys, order, k, None)
+
+  /** [[topK]] plus a 1-based rank column under the same ordering —
+    * assigned WITHOUT a window: the final pass sorts each key's ≤ k
+    * heap rows with the heap's own codegen'd ordering and appends the
+    * rank. This is the drop-in replacement for the
+    * `row_number().over(partitionBy(key).orderBy(...)) <= k` spelling:
+    * that plan shuffles and SORTS every input row per key; this one
+    * heap-reduces first and only ever sorts k rows per key.
+    *
+    * NULL ordering values rank exactly as the heap keeps them
+    * (ascending → nulls first, descending → nulls last — Catalyst's
+    * [[SortOrder]] defaults) by construction: the rank comes from the
+    * same ordering that filled the heap. An oracle compared against
+    * this output must spell the same null order. Output = keys ++ the
+    * other input columns ++ the rank, a non-null IntegerType column
+    * like `row_number()`'s; row order is unspecified.
+    */
+  def topKRanked(df: DataFrame, keys: Seq[String],
+      order: Seq[(String, Boolean)], k: Int, rankCol: String): DataFrame = {
+    val payload = df.columns.filterNot(keys.contains)
+    // Ranking by a key is meaningless (it is constant within the
+    // group), so such an order column is a caller error.
+    require(order.forall { case (c, _) => payload.contains(c) },
+      s"order columns must be non-key payload columns; offending: " +
+        order.collect { case (c, _) if !payload.contains(c) => c }.mkString(", "))
+    require(!df.columns.contains(rankCol),
+      s"rank column $rankCol collides with an input column")
+    // the alias gives the rank a Project-made id, which the analyzer
+    // renews when a plan joins this result with itself (it renews no
+    // attribute a custom node produces)
+    node(df, keys, order, k, Some(rankCol))
+      .select((keys ++ payload).map(col) :+ col(rankCol).as(rankCol): _*)
+  }
+
+  /** The one [[TopKPerKeyNode]] builder behind [[topK]] and
+    * [[topKRanked]]. The sort list is built as pure catalyst objects
+    * (no Column conversion: the Spark 4 converter leaves
+    * connect-internal node references inside the produced SortOrder,
+    * which are not task-serializable).
+    */
+  private def node(df: DataFrame, keys: Seq[String],
+      order: Seq[(String, Boolean)], k: Int,
+      rankCol: Option[String]): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
     GraftStrategies.register(spark)
@@ -81,76 +126,33 @@ object TopKPerKey {
     val flushKeys = spark.conf.getOption("spark.graft.topk.partialFlushKeys")
       .map(_.toInt).getOrElse(DefaultPartialFlushKeys)
     require(flushKeys > 0, "partialFlushKeys must be positive")
+    val rank = rankCol.map(AttributeReference(_, IntegerType, nullable = false)())
     GraftPlanBridge.ofRows(spark,
-      TopKPerKeyNode(keyExprs, sortOrders, k, flushKeys, analyzed))
-  }
-
-  /** [[topK]] plus a 1-based rank column under the same ordering —
-    * assigned WITHOUT a window. The reduced ≤k rows per key are
-    * collected into one bounded array per key (a hash aggregate that
-    * reuses the clustering the final pass already produced — no extra
-    * exchange), sorted by an inline comparator, and re-exploded with
-    * the position as the rank. This is the drop-in replacement for the
-    * `row_number().over(partitionBy(key).orderBy(...)) <= k` spelling:
-    * that plan shuffles and SORTS every input row per key; this one
-    * heap-reduces first and only ever sorts k-element arrays.
-    *
-    * NULL ordering values sort exactly as the heap's codegen'd
-    * [[SortOrder]] ranks them (ascending → nulls first, descending →
-    * nulls last — Catalyst's defaults), so a row the heap kept for a
-    * NULL score cannot resurface at a different rank here. An oracle
-    * compared against this output must spell the same null order. The
-    * rank column is IntegerType, matching `row_number()`.
-    */
-  def topKRanked(df: DataFrame, keys: Seq[String],
-      order: Seq[(String, Boolean)], k: Int, rankCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, posexplode}
-    val payload = df.columns.filterNot(keys.contains)
-    require(payload.nonEmpty, "need at least one non-key column")
-    // An order column that is also a key would be excluded from the
-    // collected struct, and the comparator's reference to it would die
-    // at analysis as an opaque unresolved-field error — fail with the
-    // contract instead. (Ranking by a key is meaningless anyway: it is
-    // constant within the group.)
-    require(order.forall { case (c, _) => payload.contains(c) },
-      s"order columns must be non-key payload columns; offending: " +
-        order.collect { case (c, _) if !payload.contains(c) => c }.mkString(", "))
-    require(!df.columns.contains(rankCol),
-      s"rank column $rankCol collides with an input column")
-    val cases = order.map { case (c, desc) =>
-      val (lt, gt) = if (desc) (1, -1) else (-1, 1)
-      // null branch mirrors SortOrder's default null ordering: for
-      // ascending a null ranks BEFORE any value (-1 on the left), for
-      // descending AFTER (the sign pair flips with lt/gt)
-      s"WHEN l.`$c` IS NULL AND r.`$c` IS NOT NULL THEN $lt " +
-        s"WHEN l.`$c` IS NOT NULL AND r.`$c` IS NULL THEN $gt " +
-        s"WHEN l.`$c` < r.`$c` THEN $lt WHEN l.`$c` > r.`$c` THEN $gt"
-    }.mkString(" ")
-    val top = topK(df, keys, order, k)
-      .groupBy(keys.map(col): _*)
-      .agg(expr(s"collect_list(struct(${payload.map(c => s"`$c`").mkString(", ")}))")
-        .as("__rows"))
-      .withColumn("__sorted",
-        expr(s"array_sort(__rows, (l, r) -> CASE $cases ELSE 0 END)"))
-    top
-      .select(keys.map(col) :+ posexplode(col("__sorted")).as(Seq("__pos", "__r")): _*)
-      .select(keys.map(col) ++ payload.map(c => col(s"__r.$c").as(c)) :+
-        (col("__pos") + 1).cast("int").as(rankCol): _*)
+      TopKPerKeyNode(keyExprs, sortOrders, k, flushKeys, rank, analyzed))
   }
 }
 
+/** `rank`, when set, is the 1-based position of each kept row within
+  * its key under `order`; the final exec emits it after the input
+  * columns.
+  */
 case class TopKPerKeyNode(keys: Seq[Expression], order: Seq[SortOrder],
-    k: Int, flushKeys: Int, child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output
+    k: Int, flushKeys: Int, rank: Option[Attribute], child: LogicalPlan)
+    extends UnaryNode {
+  override def output: Seq[Attribute] = child.output ++ rank
+  override def producedAttributes: AttributeSet = AttributeSet(rank)
   override protected def withNewChildInternal(c: LogicalPlan)
       : LogicalPlan = copy(child = c)
 }
 
+/** One pass of the operator. Only the final pass carries a `rank`. */
 case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
-    k: Int, partial: Boolean, flushKeys: Int,
+    k: Int, partial: Boolean, flushKeys: Int, rank: Option[Attribute],
     child: SparkPlan) extends UnaryExecNode {
+  require(!partial || rank.isEmpty, "the partial pass carries no rank")
 
-  override def output: Seq[Attribute] = child.output
+  override def output: Seq[Attribute] = child.output ++ rank
+  override def producedAttributes: AttributeSet = AttributeSet(rank)
 
   override def requiredChildDistribution: Seq[Distribution] =
     if (partial) UnspecifiedDistribution :: Nil
@@ -160,7 +162,9 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
   override def outputPartitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val childOutput = output
+    val childOutput = child.output
+    val allAttrs = output
+    val ranked = rank.isDefined
     val keyExprs = keys
     val sortOrders = order
     val limit = k
@@ -190,10 +194,25 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
         }
       }
 
+      // ranked: each heap sorted by the same ordering, row ++ rank
+      val rankRow = new GenericInternalRow(1)
+      val joined = new JoinedRow
+      lazy val outProj = UnsafeProjection.create(allAttrs, allAttrs)
+      def ranks(heap: java.util.PriorityQueue[InternalRow])
+          : Iterator[InternalRow] = {
+        val rows = heap.toArray(new Array[InternalRow](heap.size))
+        java.util.Arrays.sort(rows, ordering)
+        rows.iterator.zipWithIndex.map { case (row, i) =>
+          rankRow.setInt(0, i + 1)
+          outProj(joined(row, rankRow))
+        }
+      }
+
       def drain(): Iterator[InternalRow] = {
         val snapshot = heaps.values.asScala.toArray
         heaps = new java.util.HashMap // release the map, keep the heaps
-        snapshot.iterator.flatMap(_.iterator.asScala)
+        if (ranked) snapshot.iterator.flatMap(ranks)
+        else snapshot.iterator.flatMap(_.iterator.asScala)
       }
 
       new Iterator[InternalRow] {

@@ -70,7 +70,7 @@ object TopKWindowRewrite extends Rule[LogicalPlan] {
       k match {
         case Some(kk) if kk > 0 =>
           f.copy(child = w.copy(child = TopKPerKeyNode(part, order, kk,
-            TopKPerKey.DefaultPartialFlushKeys, child)))
+            TopKPerKey.DefaultPartialFlushKeys, None, child)))
         case _ => f
       }
   }

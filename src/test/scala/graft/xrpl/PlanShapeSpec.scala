@@ -783,4 +783,64 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(entries.size == 1, s"${entries.size} cache entries for signatures")
     a.unpersist()
   }
+
+  test("a ranked persisted memo built twice is one cache entry") {
+    // the rank attribute each topKRanked call makes must not keep two
+    // builds of the k-NN edge memo from matching
+    import org.apache.spark.sql.execution.CachedData
+    val a = graft.operators.SimilarityOps.knnEdges(spark, dir)
+    val b = graft.operators.SimilarityOps.knnEdges(spark, dir)
+    val cm = spark.sharedState.cacheManager
+    val field = cm.getClass.getDeclaredField("cachedData")
+    field.setAccessible(true)
+    val entries = field.get(cm).asInstanceOf[IndexedSeq[CachedData]]
+      .filter(e => Seq(a, b).exists(_.queryExecution.analyzed.sameResult(e.plan)))
+    assert(entries.size == 1, s"${entries.size} cache entries for knnEdges")
+    a.unpersist()
+  }
+
+  test("sim_rrf_fusion ranks in the heap pass and sorts only its result") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.plans.TopKPerKeyExec
+    val df = SparkEntry.queries("sim_rrf_fusion")(spark, dir)
+    df.collect()
+    val all = SparkTest.execNodes(df)
+    // the three family lists feed a union, where Spark drops no sort:
+    // each sorted list would add a range exchange of its own
+    val ranges = all.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranges.size == 1, s"${ranges.size} range exchanges")
+    // the old rank pass: collect_list over the final heap's output
+    val reRanks = all.collect {
+      case a: ObjectHashAggregateExec if (a.child match {
+        case t: TopKPerKeyExec => !t.partial
+        case _ => false
+      }) => a
+    }
+    assert(reRanks.isEmpty, reRanks.mkString("\n"))
+    assert(all.exists {
+      case t: TopKPerKeyExec => t.rank.isDefined
+      case _ => false
+    })
+  }
+
+  test("a warm sim_rrf_fusion evaluation launches at most 18 jobs") {
+    val q = SparkEntry.queries("sim_rrf_fusion")
+    def run(): Unit = q(spark, dir).write.mode("overwrite").format("noop").save()
+    run()
+    val jobs = jobsDuring(run())
+    assert(jobs <= 18, s"a warm sim_rrf_fusion launched $jobs jobs")
+  }
+
+  test("rec_assoc_rules generates its pairs once") {
+    import org.apache.spark.sql.catalyst.expressions.Flatten
+    import org.apache.spark.sql.execution.GenerateExec
+    val pairGens = collectNodes(planOf("rec_assoc_rules")).collect {
+      case g: GenerateExec if g.generator.exists(_.isInstanceOf[Flatten]) => g
+    }
+    assert(pairGens.size == 1, s"${pairGens.size} pair-generating Generates")
+  }
 }

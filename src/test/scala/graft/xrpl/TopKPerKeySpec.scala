@@ -1,7 +1,9 @@
 package graft.xrpl
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.{TopKPerKey, TopKPerKeyExec}
@@ -179,6 +181,64 @@ class TopKPerKeySpec extends AnyFunSuite {
         Seq("k" -> false, "v" -> true), 3, "rn")
     }
     assert(err.getMessage.contains("non-key payload"))
+  }
+
+  private def rankOracle(df: DataFrame, k: Int): Set[(Long, Long, Long, Int)] = {
+    val w = Window.partitionBy(col("k")).orderBy(col("v").desc, col("id"))
+    rows4(df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k))
+  }
+
+  private def ranked(df: DataFrame, k: Int): DataFrame =
+    TopKPerKey.topKRanked(df, Seq("k"), Seq("v" -> true, "id" -> false), k, "rn")
+
+  private def rows4(df: DataFrame): Set[(Long, Long, Long, Int)] =
+    df.select("id", "k", "v", "rn").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
+
+  test("topKRanked's rank equals row_number() at 1, 4 and 32 partitions") {
+    // v has many ties within a key, broken by id; k = 100 exceeds
+    // every key's row count
+    for (parts <- Seq(1, 4, 32); k <- Seq(1, 3, 100))
+      SparkTest.withPartitions(parts) {
+        val df = data().repartition(parts)
+        assert(rows4(ranked(df, k)) === rankOracle(df, k), s"parts=$parts k=$k")
+      }
+  }
+
+  test("topKRanked's rank equals row_number() when the partial pass flushes") {
+    spark.conf.set("spark.graft.topk.partialFlushKeys", "1")
+    try {
+      for (parts <- Seq(1, 4, 32)) SparkTest.withPartitions(parts) {
+        val df = data().repartition(parts)
+        assert(rows4(ranked(df, 3)) === rankOracle(df, 3), s"parts=$parts")
+      }
+    } finally spark.conf.unset("spark.graft.topk.partialFlushKeys")
+  }
+
+  test("topKRanked: keys with fewer than k rows, ties broken by the tiebreaker") {
+    import spark.implicits._
+    val df = Seq((1L, 0L, 5L), (2L, 0L, 5L), (3L, 0L, 7L), (4L, 1L, 5L))
+      .toDF("id", "k", "v")
+    assert(rows4(ranked(df, 10)) ===
+      Set((3L, 0L, 7L, 1), (1L, 0L, 5L, 2), (2L, 0L, 5L, 3), (4L, 1L, 5L, 1)))
+    val byIdDesc = TopKPerKey.topKRanked(df, Seq("k"),
+      Seq("v" -> true, "id" -> true), 2, "rn")
+    assert(rows4(byIdDesc) === Set((3L, 0L, 7L, 1), (2L, 0L, 5L, 2), (4L, 1L, 5L, 1)))
+  }
+
+  test("topKRanked's output ends in a non-null IntegerType rank") {
+    val out = ranked(data(), 3)
+    assert(out.columns.toSeq === Seq("k", "id", "v", "rn"))
+    val rn = out.schema.last
+    assert(rn.dataType === IntegerType && !rn.nullable, rn)
+  }
+
+  test("a ranked list joins with itself") {
+    val r = ranked(data(), 3)
+    val pairs = r.as("a").join(r.as("b"),
+        col("a.k") === col("b.k") && col("a.rn") === col("b.rn") - 1)
+      .select(col("a.id"), col("b.id"))
+    assert(pairs.count() === 7 * 2)
   }
 
   test("keys with fewer than k rows keep all their rows") {
