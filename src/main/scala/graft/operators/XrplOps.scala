@@ -176,23 +176,12 @@ object XrplOps {
   private def prepareLiveStore(s: SparkSession): Unit = synchronized {
     if (!liveStorePrepared) {
       prepare(s)
-      import s.implicits._
       val liveDir = s"$DumpDir/live"
-      val fs = new org.apache.hadoop.fs.Path(liveDir)
+      new org.apache.hadoop.fs.Path(liveDir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(liveDir), true)
+        .delete(new org.apache.hadoop.fs.Path(liveDir), true)
       val dropDir = s"$liveDir/drop"
-      fs.mkdirs(new org.apache.hadoop.fs.Path(dropDir))
-      val lines = s.read.option("wholetext", "true")
-        .text(XrplTables.fixturesPath).as[String].collect()
-        .map(x => graft.xrpl.Json.parse(x).toString)
-      val (first, second) = lines.splitAt(lines.length / 2)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dropDir/ledgers_a.jsonl"),
-        first.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dropDir/ledgers_b.jsonl"),
-        second.mkString("\n").getBytes("UTF-8"))
+      XrplTables.writeFixtureDrops(s, dropDir)
       val stream = s.readStream.schema("value STRING")
         .option("maxFilesPerTrigger", "1").text(dropDir)
       val q = graft.streaming.DaemonStream.liveStateDaemon(s, stream, liveDir)

@@ -3,11 +3,11 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute,
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
   AttributeReference, AttributeSet, GenericInternalRow, JoinedRow,
   SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort,
-  UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project,
+  Sort, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution,
   OrderedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
@@ -105,7 +105,7 @@ object RangeScan {
 
     // Pre-project the key and value expressions so ordinary analysis
     // resolves them (they may be arbitrary expressions, not just
-    // columns); the helper columns are dropped again after the
+    // columns); the helper columns are projected away again after the
     // operator. The sort order resolves the same way: a throwaway
     // sortWithinPartitions is analyzed and its resolved SortOrder list
     // is lifted out (the Spark 4 Column→Expression bridge yields
@@ -130,8 +130,12 @@ object RangeScan {
     }
     val node = RangeScanNode(sortOrder, keyAttrs, valueAttrs, outAttrs,
       fold, exclusive, analyzed)
-    GraftPlanBridge.ofRows(spark, node)
-      .drop(keys.indices.map(kCol) ++ values.indices.map(vCol): _*)
+    // the aliases give the fold columns Project-made ids, which the
+    // analyzer renews when a plan joins this result with itself (it
+    // renews no attribute a custom node produces)
+    GraftPlanBridge.ofRows(spark, Project(
+      analyzed.output.dropRight(keys.size + values.size) ++
+        outAttrs.map(a => Alias(a, a.name)()), node))
   }
 
   /** Accumulator per value column: null-skipping running fold with the

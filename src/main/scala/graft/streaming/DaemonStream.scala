@@ -1,380 +1,126 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.xrpl.ParsedLedger
 import graft.xrpl.agg.Aggregations
+import graft.xrpl.api.LiveState
 
 /** Streaming forms of the reference's remaining incremental
   * aggregation daemons — payments (lib/aggregation/payments.js),
   * account payments (lib/aggregation/accountPayments.js), network
   * stats (lib/aggregation/stats.js) and fees (lib/aggregation/
-  * fees.js). [[CandleStream]] covers the fifth (exchanges,
-  * lib/aggregation/exchanges.js) with the same shape.
+  * fees.js) — plus the live-state frontier. [[CandleStream]] covers
+  * the exchanges daemon (lib/aggregation/exchanges.js).
   *
-  * TWO shapes per daemon:
+  * One shape, the reference's: each daemon merges every new ledger
+  * into its aggregate. A daemon keeps one or more state [[Chain]]s,
+  * each a keyed state table of mergeable sufficient statistics
+  * advanced per micro-batch through [[IncrementalDaemon.step]]
+  * (state(N) = reduce(state(N−1) ∪ partial(N))), with the published
+  * store derived from it — O(batch + |state|) per micro-batch, |state|
+  * bounded by key cardinality. The reference's periodic full reload
+  * (exchanges.js:484-496) is a repair, not a second shape: rebuilding
+  * a store is the batch aggregation it must equal.
   *
-  * 1. **Stage-and-rebuild** (the parity harness): each micro-batch's
-  *    parsed rows are staged, then the aggregate store is rebuilt from
-  *    staging and overwritten — the reference's periodic full-reload
-  *    repair (exchanges.js:484-496 applies the same pattern to all
-  *    daemons) as an idempotent batch job per micro-batch. Because the
-  *    rebuild calls the SAME batch aggregation code ([[Aggregations]]),
-  *    stream ≡ batch holds by construction once staging holds every
-  *    row exactly once. O(history) per batch — a harness, not a
-  *    deployment.
-  * 2. **Incremental merge** (`*DaemonIncremental` — the deployment
-  *    shape): a keyed state table of mergeable sufficient statistics
-  *    is advanced per micro-batch via [[IncrementalDaemon.step]]
-  *    (state(N) = reduce(state(N−1) ∪ partial(N))) and the published
-  *    store derived from it — O(batch + |state|) per micro-batch,
-  *    |state| bounded by key cardinality. IncrementalDaemonSpec proves
-  *    the published store is value-identical to the batch aggregation
-  *    across multi-micro-batch runs and replays.
+  * Layout under `dir`, per chain: the state at `state/<name>/batch=N`
+  * (committed with `_SUCCESS`, the current and previous batch kept)
+  * and the published table at `store/<name>`, overwritten per batch.
   *
-  * EXACTLY-ONCE staging: foreachBatch re-runs a micro-batch after a
-  * failure, so a plain `append` would double-stage its rows and
-  * silently inflate every aggregate. Each batch therefore OVERWRITES
-  * its own `batch=<id>` staging subdirectory — a replay rewrites the
-  * same rows in place (idempotent; DaemonStreamSpec pins replay ≡
-  * once), and the rebuild reads the staging tree through
-  * [[readStaging]].
-  *
-  * STAGING RETENTION: without compaction the staging tree grows one
-  * parquet dir per micro-batch forever (small-file explosion at
-  * deployment timescales). [[compactStaging]] folds committed batch
-  * dirs into one consolidated `compact=<K>` partition once enough
-  * accumulate; [[readStaging]] reads the newest consolidated dir plus
-  * the batch dirs above it, so the fold is crash-safe at every step
-  * (see the method docs). Reading explicit leaf dirs also keeps
-  * partition discovery's inferred `batch` column out of the frames
-  * handed to the aggregations.
-  *
-  * Exactness carries over: every sum in these daemons rides the
-  * DECIMAL/limb disciplines or exact counts, so the rebuilt or merged
-  * store is identical no matter how arrivals were micro-batched.
+  * Exactness carries over: every sum rides the DECIMAL/limb
+  * disciplines or exact counts, so the merged store is identical no
+  * matter how arrivals were micro-batched. IncrementalDaemonSpec
+  * proves each store value-identical to the batch aggregation across
+  * multi-batch runs, restarts and replays.
   */
 object DaemonStream {
 
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** One state chain: `partial` turns a parsed micro-batch into state
+    * rows, `reduce` merges any union of state tables, and `publish`
+    * derives the store from the merged state. */
+  private case class Chain(name: String,
+      partial: Dataset[ParsedLedger] => DataFrame,
+      reduce: DataFrame => DataFrame,
+      publish: DataFrame => DataFrame)
 
-  private def subdirs(spark: SparkSession, dir: String): Seq[String] = {
-    val f = fs(spark, dir)
-    val p = new Path(dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-  }
-
-  private def ids(names: Seq[String], prefix: String): Seq[Long] =
-    names.collect { case n if n.startsWith(prefix) =>
-      scala.util.Try(n.stripPrefix(prefix).toLong).toOption }.flatten
-
-  /** ids under `prefix` whose dir carries a `_SUCCESS` marker — the
-    * only dirs any reader or fold may honor. A crash mid-write leaves
-    * a marker-less partial dir that must be invisible, or a restart
-    * would prefer it and silently drop the still-present batch dirs
-    * it claims to cover. */
-  private def committedIds(spark: SparkSession, dir: String,
-      names: Seq[String], prefix: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    ids(names, prefix)
-      .filter(id => f.exists(new Path(s"$dir/$prefix$id/_SUCCESS")))
-  }
-
-  /** Read the staging tree selectively: the newest consolidated dir
-    * (`compact=<K>`, holding every batch ≤ K) plus every `batch=<id>`
-    * with id > K. Batch dirs ≤ K are IGNORED even if still present —
-    * that's what makes compaction crash-safe (a fold that wrote its
-    * consolidated dir but died before deleting the originals changes
-    * nothing a reader sees). */
-  private[graft] def readStaging(spark: SparkSession, dir: String): DataFrame = {
-    val names = subdirs(spark, dir)
-    val k = committedIds(spark, dir, names, "compact=")
-      .maxOption.getOrElse(-1L)
-    val paths =
-      (if (k >= 0) Seq(s"$dir/compact=$k") else Seq.empty) ++
-      ids(names, "batch=").filter(_ > k).sorted.map(id => s"$dir/batch=$id")
-    spark.read.parquet(paths: _*)
-  }
-
-  /** Fold committed staging batch dirs STRICTLY BELOW the current
-    * batch into one consolidated partition once `minDirs` accumulate.
-    * Protocol (idempotent, replay-safe, crash-safe):
-    *  - only ids < currentBatchId fold — structured streaming never
-    *    replays anything older than the current (last uncommitted)
-    *    batch, so folded ids can never be re-staged;
-    *  - the new `compact=<K>` (K = max folded id) is written FIRST;
-    *    from that instant [[readStaging]] prefers it and ignores the
-    *    originals, so the subsequent deletes are pure garbage
-    *    collection — a crash at any point leaves either the old view
-    *    or the new view, never a double-read or a gap. */
-  private[graft] def compactStaging(spark: SparkSession, dir: String,
-      currentBatchId: Long, minDirs: Int = 8): Unit = {
-    val f = fs(spark, dir)
-    val names = subdirs(spark, dir)
-    // drop partial compact dirs from a crashed fold FIRST — they are
-    // invisible to readers (no _SUCCESS) but would collide with a
-    // same-K rewrite below
-    (ids(names, "compact=").toSet --
-        committedIds(spark, dir, names, "compact=").toSet)
-      .foreach { id =>
-        try { f.delete(new Path(s"$dir/compact=$id"), true); () }
-        catch { case _: Throwable => () }
-      }
-    val k0 = committedIds(spark, dir, names, "compact=")
-      .maxOption.getOrElse(-1L)
-    val olds = committedIds(spark, dir, names, "batch=")
-      .filter(id => id > k0 && id < currentBatchId)
-    if (olds.size >= minDirs) {
-      val newK = olds.max
-      val paths = (if (k0 >= 0) Seq(s"$dir/compact=$k0") else Seq.empty) ++
-        olds.sorted.map(id => s"$dir/batch=$id")
-      spark.read.parquet(paths: _*)
-        .write.mode("overwrite").parquet(s"$dir/compact=$newK")
-      // garbage collection (best effort — failures leave ignored dirs)
-      (olds.map(id => s"$dir/batch=$id") ++
-        (if (k0 >= 0) Seq(s"$dir/compact=$k0") else Seq.empty))
-        .foreach { p =>
-          try { f.delete(new Path(p), true); () }
-          catch { case _: Throwable => () }
-        }
-    }
-  }
-
-  /** Stage `batch` under `stagingDir/batch=<id>` (overwrite — replay
-    * safe), rebuild the store from the staging tree, then compact old
-    * staging partitions.
-    */
-  private[graft] def stageAndRebuild(spark: SparkSession,
-      batch: DataFrame, batchId: Long, stagingDir: String,
-      storeDir: String, compactMinDirs: Int = 8)(
-      aggregate: DataFrame => DataFrame): Unit = {
-    batch.write.mode("overwrite").parquet(s"$stagingDir/batch=$batchId")
-    aggregate(readStaging(spark, stagingDir))
-      .write.mode("overwrite").parquet(storeDir)
-    compactStaging(spark, stagingDir, batchId, compactMinDirs)
-  }
-
-  /** A4 payment-volume daemon: per-(currency, issuer, bucket) count /
-    * exact amount / average, rebuilt per micro-batch.
-    * Staging: `dir`/staging/payments; store: `dir`/store/payment_volume.
-    */
-  def paymentVolumeDaemon(spark: SparkSession, raw: DataFrame, dir: String,
-      unit: String = "day",
-      checkpoint: Option[String] = None): StreamingQuery = {
-    import spark.implicits._
-    val w = CandleStream.parsedStream(spark, raw).flatMap(_.payments).toDF()
-      .writeStream
+  /** Parses `raw` and, per micro-batch, persists the parsed batch once,
+    * advances each chain in order and overwrites its store. */
+  private def run(spark: SparkSession, raw: DataFrame, dir: String,
+      checkpoint: Option[String], chains: Chain*): StreamingQuery = {
+    val w = CandleStream.parsedStream(spark, raw).writeStream
     checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        stageAndRebuild(spark, batch, batchId,
-          s"$dir/staging/payments", s"$dir/store/payment_volume")(
-          Aggregations.paymentVolume(_, unit))
-      }
-      .start()
+    w.foreachBatch { (batch: Dataset[ParsedLedger], batchId: Long) =>
+      val b = batch.persist()
+      try chains.foreach { c =>
+        val st = IncrementalDaemon.step(spark, s"$dir/state/${c.name}",
+          batchId, c.partial(b))(c.reduce)
+        c.publish(st).write.mode("overwrite").parquet(s"$dir/store/${c.name}")
+      } finally { b.unpersist(); () }
+    }.start()
   }
 
-  /** A6 network-stats daemon: the long-format (date, family, name,
-    * value) stats table rebuilt per micro-batch. One incoming ledger
-    * stream fans out to the five derived staging tables the stats
-    * job reads (stats.js consumes the same five HBase feeds). The
-    * micro-batch Dataset is persisted across the five stage() jobs
-    * (each write is its own Spark job — unpersisted, the batch would
-    * re-parse five times).
-    */
-  def statsDaemon(spark: SparkSession, raw: DataFrame, dir: String,
-      unit: String = "day",
-      checkpoint: Option[String] = None): StreamingQuery = {
-    import spark.implicits._
-    val w = CandleStream.parsedStream(spark, raw)
-      .writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w
-      .foreachBatch { (batch: Dataset[ParsedLedger], batchId: Long) =>
-        val b = batch.persist()
-        try {
-          def stage(df: DataFrame, name: String): Unit =
-            df.write.mode("overwrite")
-              .parquet(s"$dir/staging/$name/batch=$batchId")
-          stage(b.flatMap(_.transactions).toDF(), "transactions")
-          stage(b.flatMap(_.payments).toDF(), "payments")
-          stage(b.flatMap(_.exchanges).toDF(), "exchanges")
-          stage(b.flatMap(_.accountsCreated).toDF(), "accounts_created")
-          stage(b.map(_.ledger).toDF(), "ledgers")
-          val tabs = Seq("transactions", "payments", "exchanges",
-            "accounts_created", "ledgers")
-          Aggregations.stats(
-              readStaging(spark, s"$dir/staging/transactions"),
-              readStaging(spark, s"$dir/staging/payments"),
-              readStaging(spark, s"$dir/staging/exchanges"),
-              readStaging(spark, s"$dir/staging/accounts_created"),
-              readStaging(spark, s"$dir/staging/ledgers"),
-              unit)
-            .write.mode("overwrite").parquet(s"$dir/store/stats")
-          tabs.foreach(t => compactStaging(spark, s"$dir/staging/$t", batchId))
-        } finally { b.unpersist(); () }
-      }
-      .start()
-  }
-
-  /** A7 fee daemon: per-ledger fee summaries rolled into hour/day
-    * rows, rebuilt per micro-batch.
-    * Staging: `dir`/staging/fee_summaries; store: `dir`/store/fees.
-    */
-  def feeDaemon(spark: SparkSession, raw: DataFrame, dir: String,
-      unit: String = "hour",
-      checkpoint: Option[String] = None): StreamingQuery = {
-    import spark.implicits._
-    val w = CandleStream.parsedStream(spark, raw).map(_.feeSummary).toDF()
-      .writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        stageAndRebuild(spark, batch, batchId,
-          s"$dir/staging/fee_summaries", s"$dir/store/fees")(
-          Aggregations.feeRollup(_, unit))
-      }
-      .start()
-  }
-
-  // ───────────── incremental-merge (deployment) daemons ─────────────
-
-  /** A4, incremental: payment-volume state advanced per micro-batch;
-    * state: `dir`/state/payment_volume; store: `dir`/store/payment_volume.
-    */
+  /** A4: per-(currency, issuer, bucket) count, exact amount and
+    * average. Chain `payment_volume`. */
   def paymentVolumeDaemonIncremental(spark: SparkSession, raw: DataFrame,
       dir: String, unit: String = "day",
       checkpoint: Option[String] = None): StreamingQuery = {
     import spark.implicits._
-    val w = CandleStream.parsedStream(spark, raw).flatMap(_.payments).toDF()
-      .writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val st = IncrementalDaemon.step(spark,
-          s"$dir/state/payment_volume", batchId,
-          Aggregations.paymentVolumeState(batch, unit))(
-          Aggregations.reducePaymentVolumeState)
-        Aggregations.publishPaymentVolume(st)
-          .write.mode("overwrite").parquet(s"$dir/store/payment_volume")
-        ()
-      }
-      .start()
+    run(spark, raw, dir, checkpoint, Chain("payment_volume",
+      b => Aggregations.paymentVolumeState(b.flatMap(_.payments).toDF(), unit),
+      Aggregations.reducePaymentVolumeState, Aggregations.publishPaymentVolume))
   }
 
-  /** A6, incremental: the uniform (date, family, name, kind) stats
-    * state advanced per micro-batch — ratios merge as exact integer
-    * sufficient statistics, never as averaged averages.
-    */
+  /** A6: the long-format (date, family, name, value) network stats —
+    * ratios merge as exact integer sufficient statistics, never as
+    * averaged averages. Chain `stats`. */
   def statsDaemonIncremental(spark: SparkSession, raw: DataFrame,
       dir: String, unit: String = "day",
       checkpoint: Option[String] = None): StreamingQuery = {
     import spark.implicits._
-    val w = CandleStream.parsedStream(spark, raw)
-      .writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w
-      .foreachBatch { (batch: Dataset[ParsedLedger], batchId: Long) =>
-        val b = batch.persist()
-        try {
-          val partial = Aggregations.statsState(
-            b.flatMap(_.transactions).toDF(),
-            b.flatMap(_.payments).toDF(),
-            b.flatMap(_.exchanges).toDF(),
-            b.flatMap(_.accountsCreated).toDF(),
-            b.map(_.ledger).toDF(), unit)
-          val st = IncrementalDaemon.step(spark,
-            s"$dir/state/stats", batchId, partial)(
-            Aggregations.reduceStatsState)
-          Aggregations.publishStats(st)
-            .write.mode("overwrite").parquet(s"$dir/store/stats")
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    run(spark, raw, dir, checkpoint, Chain("stats",
+      b => Aggregations.statsState(b.flatMap(_.transactions).toDF(),
+        b.flatMap(_.payments).toDF(), b.flatMap(_.exchanges).toDF(),
+        b.flatMap(_.accountsCreated).toDF(), b.map(_.ledger).toDF(), unit),
+      Aggregations.reduceStatsState, Aggregations.publishStats))
   }
 
-  /** A7, incremental: fee state (limb-exact totals) advanced per
-    * micro-batch. */
+  /** A7: per-ledger fee summaries rolled into hour/day rows with
+    * limb-exact totals. Chain `fees`. */
   def feeDaemonIncremental(spark: SparkSession, raw: DataFrame,
       dir: String, unit: String = "hour",
       checkpoint: Option[String] = None): StreamingQuery = {
     import spark.implicits._
-    val w = CandleStream.parsedStream(spark, raw).map(_.feeSummary).toDF()
-      .writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val st = IncrementalDaemon.step(spark,
-          s"$dir/state/fees", batchId,
-          Aggregations.feeState(batch, unit))(Aggregations.reduceFeeState)
-        Aggregations.publishFees(st)
-          .write.mode("overwrite").parquet(s"$dir/store/fees")
-        ()
-      }
-      .start()
+    run(spark, raw, dir, checkpoint, Chain("fees",
+      b => Aggregations.feeState(b.map(_.feeSummary).toDF(), unit),
+      Aggregations.reduceFeeState, Aggregations.publishFees))
   }
 
-  /** S10 live-state daemon: the frontier balance and open-offer tables
-    * maintained incrementally (the shape LiveState's header promises —
-    * argmax-by-(ledger, tx, node) is associative, so the frontier
-    * advances per micro-batch and a point lookup reads the compacted
-    * store instead of scanning history).
-    * Stores: `dir`/store/live_balances, `dir`/store/open_offers.
-    */
+  /** S10: the frontier balance and open-offer tables (argmax by
+    * (ledger, tx, node) is associative, so the frontier advances per
+    * micro-batch and a point lookup reads the store instead of
+    * scanning history). Chains `live_balances`, then `open_offers`. */
   def liveStateDaemon(spark: SparkSession, raw: DataFrame, dir: String,
       checkpoint: Option[String] = None): StreamingQuery = {
     import spark.implicits._
-    import graft.xrpl.api.LiveState
-    val w = CandleStream.parsedStream(spark, raw)
-      .writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w
-      .foreachBatch { (batch: Dataset[ParsedLedger], batchId: Long) =>
-        val b = batch.persist()
-        try {
-          val bst = IncrementalDaemon.step(spark,
-            s"$dir/state/live_balances", batchId,
-            LiveState.balancesState(b.flatMap(_.balanceChanges).toDF()))(
-            LiveState.reduceBalancesState)
-          LiveState.publishBalances(bst)
-            .write.mode("overwrite").parquet(s"$dir/store/live_balances")
-          val ost = IncrementalDaemon.step(spark,
-            s"$dir/state/open_offers", batchId,
-            LiveState.offersState(b.flatMap(_.offers).toDF()))(
-            LiveState.reduceOffersState)
-          LiveState.publishOpenOffers(ost)
-            .write.mode("overwrite").parquet(s"$dir/store/open_offers")
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    run(spark, raw, dir, checkpoint,
+      Chain("live_balances",
+        b => LiveState.balancesState(b.flatMap(_.balanceChanges).toDF()),
+        LiveState.reduceBalancesState, LiveState.publishBalances),
+      Chain("open_offers",
+        b => LiveState.offersState(b.flatMap(_.offers).toDF()),
+        LiveState.reduceOffersState, LiveState.publishOpenOffers))
   }
 
-  /** A5 account-payments daemon (the reference's 5th aggregation
-    * daemon, lib/aggregation/accountPayments.js), incremental-only:
-    * per-(account, day) profile whose distinct-counterparty sets merge
-    * by keyed array union. Store: `dir`/store/account_payments.
-    */
+  /** A5: per-(account, day) payment profile whose distinct-counterparty
+    * sets merge by keyed array union. Chain `account_payments`. */
   def accountPaymentsDaemon(spark: SparkSession, raw: DataFrame,
       dir: String,
       checkpoint: Option[String] = None): StreamingQuery = {
     import spark.implicits._
-    val w = CandleStream.parsedStream(spark, raw).flatMap(_.payments).toDF()
-      .writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val st = IncrementalDaemon.step(spark,
-          s"$dir/state/account_payments", batchId,
-          Aggregations.accountPaymentsState(batch))(
-          Aggregations.reduceAccountPaymentsState)
-        Aggregations.publishAccountPayments(st)
-          .write.mode("overwrite").parquet(s"$dir/store/account_payments")
-        ()
-      }
-      .start()
+    run(spark, raw, dir, checkpoint, Chain("account_payments",
+      b => Aggregations.accountPaymentsState(b.flatMap(_.payments).toDF()),
+      Aggregations.reduceAccountPaymentsState,
+      Aggregations.publishAccountPayments))
   }
 }

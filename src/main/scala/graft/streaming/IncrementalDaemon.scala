@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Replay-safe versioned-state storage for the incremental aggregation
-  * daemons (the associative re-reduce deployment shape; batch-side
+  * daemons ([[DaemonStream]]'s one chain shape; batch-side
   * state builders live in graft.xrpl.agg.Aggregations).
   *
   * Protocol: state(N) = reduce(state(N−1) ∪ partial(batch N)), written
@@ -46,13 +46,18 @@ object IncrementalDaemon {
 
   /** One merge step; returns the merged state read back from the
     * written artifact (so downstream publishes read stable files, not
-    * a live plan over a dir about to change). */
+    * a live plan over a dir about to change). Both state reads carry a
+    * known schema, so neither launches a schema-inference job: `reduce`
+    * is schema-closed (its output schema is its input's, up to the
+    * nullability a parquet write drops), so the predecessor has
+    * `partial`'s schema and the new state `merged`'s.
+    */
   def step(spark: SparkSession, stateDir: String, batchId: Long,
       partial: DataFrame)(reduce: DataFrame => DataFrame): DataFrame = {
     val prev = committedIds(spark, stateDir).filter(_ < batchId)
     val merged = prev.maxOption match {
       case Some(p) =>
-        reduce(spark.read.parquet(s"$stateDir/batch=$p")
+        reduce(spark.read.schema(partial.schema).parquet(s"$stateDir/batch=$p")
           .unionByName(partial))
       case None => reduce(partial)
     }
@@ -61,6 +66,6 @@ object IncrementalDaemon {
       try { fs(spark, stateDir).delete(new Path(s"$stateDir/batch=$id"), true); () }
       catch { case _: Throwable => () }
     }
-    spark.read.parquet(s"$stateDir/batch=$batchId")
+    spark.read.schema(merged.schema).parquet(s"$stateDir/batch=$batchId")
   }
 }

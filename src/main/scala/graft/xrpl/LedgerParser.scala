@@ -227,6 +227,24 @@ object XrplTables {
       .orElse(Option(getClass.getResource("/ledgers")).map(_.getPath))
       .getOrElse(sys.error("ledger fixtures not found"))
 
+  /** Writes the fixture ledgers into `dropDir` as compact one-line
+    * JSON, split in file order into two drop files, `ledgers_a.jsonl`
+    * and `ledgers_b.jsonl`: a file source with `maxFilesPerTrigger` 1
+    * reads them as two micro-batches. `halves` picks which to write.
+    */
+  private[graft] def writeFixtureDrops(spark: SparkSession, dropDir: String,
+      halves: Seq[Int] = Seq(0, 1)): Unit = {
+    import spark.implicits._
+    val lines = spark.read.option("wholetext", "true").text(fixturesPath)
+      .as[String].collect().map(Json.parse(_).toString)
+    val (first, second) = lines.splitAt(lines.length / 2)
+    val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dropDir))
+    halves.foreach { h =>
+      java.nio.file.Files.write(dir.resolve(s"ledgers_${"ab"(h)}.jsonl"),
+        Seq(first, second)(h).mkString("\n").getBytes("UTF-8"))
+    }
+  }
+
   /** Read ledger JSON files (one ledger per file or per line) and parse. */
   def fromFiles(spark: SparkSession, path: String): XrplTables = {
     import spark.implicits._

@@ -317,10 +317,10 @@ object Aggregations {
       .agg(
         // exact-decimal sum (the dsum discipline, same as the
         // xrpl_fee_rollup gate): a raw double sum is order-dependent,
-        // so the streamed daemon's rebuild from staging parquet could
-        // differ from the batch table by a ulp depending on partition
-        // layout — DaemonStreamSpec's row-exact parity needs the sum
-        // to be associative
+        // so the streamed daemon's merged store could differ from the
+        // batch table by a ulp depending on partition layout —
+        // IncrementalDaemonSpec's row-exact parity needs the sum to be
+        // associative
         graft.functions.Cols.dsum(col("total")).as("total"),
         sum(col("tx_count")).cast("long").as("tx_count"),
         min(col("min")).as("min"),
@@ -514,10 +514,9 @@ object Aggregations {
   }
 
   // ──────────── incremental (associative re-reduce) forms ────────────
-  // The deployment shape of the streaming daemons: instead of
-  // rebuilding a store from the full staging history every micro-batch
-  // (O(history) — fine as a parity harness, wrong as a deployment),
-  // each daemon keeps a keyed STATE table of mergeable sufficient
+  // The one shape of the streaming daemons: instead of rebuilding a
+  // store from the full history every micro-batch (O(history)), each
+  // daemon keeps a keyed STATE table of mergeable sufficient
   // statistics — counts, exact-decimal/limb sums, mins/maxes, distinct
   // sets — so a micro-batch costs O(batch + |state|), and |state| is
   // bounded by key cardinality, not history length. Per daemon:
@@ -526,7 +525,9 @@ object Aggregations {
   //                        associative + commutative by construction
   //                        (sums of sums, min of mins, set unions), so
   //                        the result is independent of how arrivals
-  //                        were micro-batched;
+  //                        were micro-batched; schema-closed (output
+  //                        schema = input schema up to nullability),
+  //                        so state reads need no schema inference;
   //   `publishXxx(state)`  the user-facing table, value-identical to
   //                        the one-shot batch aggregation (proven in
   //                        IncrementalDaemonSpec: every derived float

@@ -3,19 +3,19 @@ package graft.xrpl
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.functions.{col, sort_array}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{DaemonStream, IncrementalDaemon}
 import graft.xrpl.agg.Aggregations
 
-/** The incremental-merge (deployment-shape) daemons: the published
-  * store after N micro-batches must be VALUE-IDENTICAL to the one-shot
-  * batch aggregation over the same rows — counts, exact decimal/limb
-  * sums, ratio metrics and distinct-counterparty sets all merge
+/** The incremental-merge daemons: the published store after N
+  * micro-batches must be VALUE-IDENTICAL to the one-shot batch
+  * aggregation over the same rows — counts, exact decimal/limb sums,
+  * ratio metrics and distinct-counterparty sets all merge
   * associatively — and the state chain must survive replays, restarts
-  * and retention. Also pins the staging-compaction protocol of the
-  * stage-and-rebuild daemons (VERDICT r11 #6).
+  * and retention, in the on-disk layout its readers expect.
   */
 class IncrementalDaemonSpec extends AnyFunSuite {
 
@@ -25,16 +25,8 @@ class IncrementalDaemonSpec extends AnyFunSuite {
 
   /** Two-file drop dir of compact single-line ledger JSON. */
   private def mkDropDir(): String = {
-    import spark.implicits._
     val dropDir = Files.createTempDirectory("graft-inc-drop").toString
-    val raw = spark.read.option("wholetext", "true")
-      .text(XrplTables.fixturesPath).as[String].collect()
-    val lines = raw.map(s => Json.parse(s).toString)
-    val (first, second) = lines.splitAt(lines.length / 2)
-    Files.write(java.nio.file.Paths.get(s"$dropDir/ledgers_a.jsonl"),
-      first.mkString("\n").getBytes)
-    Files.write(java.nio.file.Paths.get(s"$dropDir/ledgers_b.jsonl"),
-      second.mkString("\n").getBytes)
+    XrplTables.writeFixtureDrops(spark, dropDir)
     dropDir
   }
 
@@ -119,27 +111,20 @@ class IncrementalDaemonSpec extends AnyFunSuite {
   }
 
   test("incremental daemon restart from checkpoint continues the state chain") {
-    import spark.implicits._
     val dropDir = Files.createTempDirectory("graft-inc-rr-drop").toString
     val ckptDir = Files.createTempDirectory("graft-inc-rr-ckpt").toString
     val outDir = Files.createTempDirectory("graft-inc-rr-out").toString
-    val raw = spark.read.option("wholetext", "true")
-      .text(XrplTables.fixturesPath).as[String].collect()
-    val lines = raw.map(s => Json.parse(s).toString)
-    val (first, second) = lines.splitAt(lines.length / 2)
 
     def start() = {
       val stream = spark.readStream.schema("value STRING").text(dropDir)
       DaemonStream.paymentVolumeDaemonIncremental(spark, stream, outDir,
         checkpoint = Some(ckptDir))
     }
-    Files.write(java.nio.file.Paths.get(s"$dropDir/a.jsonl"),
-      first.mkString("\n").getBytes)
+    XrplTables.writeFixtureDrops(spark, dropDir, halves = Seq(0))
     val q1 = start()
     try q1.processAllAvailable() finally q1.stop()
 
-    Files.write(java.nio.file.Paths.get(s"$dropDir/b.jsonl"),
-      second.mkString("\n").getBytes)
+    XrplTables.writeFixtureDrops(spark, dropDir, halves = Seq(1))
     val q2 = start()
     try q2.processAllAvailable() finally q2.stop()
 
@@ -173,60 +158,72 @@ class IncrementalDaemonSpec extends AnyFunSuite {
     assert(dirs.toSet == Set("batch=1", "batch=2"))
   }
 
-  test("staging compaction: store equality across fold + replay, bounded tree") {
-    val dir = Files.createTempDirectory("graft-compact").toString
+  /** Every state chain the daemons keep: (name, partial state of the
+    * whole fixture, reduce). */
+  private def chains: Seq[(String, DataFrame, DataFrame => DataFrame)] = {
+    import graft.xrpl.api.LiveState
     val pay = tables.payments.toDF()
-    def part(i: Int): DataFrame = pay.filter(pmod(col("ledger_index"), lit(4)) === i)
-    def run(id: Long): Unit =
-      DaemonStream.stageAndRebuild(spark, part(id.toInt), id,
-        s"$dir/staging", s"$dir/store", compactMinDirs = 2)(
-        Aggregations.paymentVolume(_, "day"))
-    run(0L); run(1L); run(2L); run(3L)
-    run(3L) // replay of the LATEST batch, after the fold of 0..1
-    rowExact(
-      spark.read.parquet(s"$dir/store"),
-      Aggregations.paymentVolume(pay, "day"),
-      "compacted store after replay")
-    val names = new java.io.File(s"$dir/staging").list()
-      .filter(n => n.startsWith("batch=") || n.startsWith("compact="))
-    assert(names.count(_.startsWith("compact=")) == 1,
-      s"exactly one consolidated dir: ${names.toSeq}")
-    assert(names.length <= 3, s"bounded staging tree: ${names.toSeq}")
-    // the selective reader sees every staged row exactly once
-    assert(DaemonStream.readStaging(spark, s"$dir/staging").count()
-      == pay.count())
+    Seq(
+      ("payment_volume", Aggregations.paymentVolumeState(pay, "day"),
+        Aggregations.reducePaymentVolumeState),
+      ("stats", Aggregations.statsState(tables.transactions.toDF(), pay,
+        tables.exchanges.toDF(), tables.accountsCreated.toDF(),
+        tables.ledgers.toDF(), "day"), Aggregations.reduceStatsState),
+      ("fees", Aggregations.feeState(tables.feeSummaries.toDF(), "hour"),
+        Aggregations.reduceFeeState),
+      ("account_payments", Aggregations.accountPaymentsState(pay),
+        Aggregations.reduceAccountPaymentsState),
+      ("live_balances", LiveState.balancesState(tables.balanceChanges.toDF()),
+        LiveState.reduceBalancesState),
+      ("open_offers", LiveState.offersState(tables.offers.toDF()),
+        LiveState.reduceOffersState))
   }
 
-  test("crash-partial compact dir (no _SUCCESS) is invisible and purged") {
-    val dir = Files.createTempDirectory("graft-partial").toString
-    val pay = tables.payments.toDF()
-    def part(i: Int): DataFrame =
-      pay.filter(pmod(col("ledger_index"), lit(4)) === i)
-    // four committed batch dirs — a live staging tree
-    (0 to 3).foreach { i =>
-      part(i).write.parquet(s"$dir/staging/batch=$i")
+  test("every state chain's reduce is schema-closed; state reads need no inference") {
+    for ((name, partial, reduce) <- chains) {
+      assert(DataTypeUtils.equalsIgnoreNullability(
+        reduce(partial).schema, partial.schema), name)
+      val dir = Files.createTempDirectory(s"graft-inc-schema-$name").toString
+      IncrementalDaemon.step(spark, dir, 0L, partial)(reduce)
+      val st = IncrementalDaemon.step(spark, dir, 1L, partial)(reduce)
+      // the predecessor is read with the partial's schema, the new
+      // state with the merge's: both are what inference would give
+      assert(spark.read.schema(partial.schema).parquet(s"$dir/batch=0").schema ===
+        spark.read.parquet(s"$dir/batch=0").schema, name)
+      assert(st.schema === spark.read.parquet(s"$dir/batch=1").schema, name)
     }
-    // simulate a fold that crashed after writing its consolidated dir
-    // but before committing: compact=3 claims to cover batches 0..3
-    // yet holds only batch 0's rows, and carries no _SUCCESS marker
-    part(0).write.parquet(s"$dir/staging/compact=3")
-    val marker = new java.io.File(s"$dir/staging/compact=3/_SUCCESS")
-    assert(marker.delete(), "test setup: drop the commit marker")
-    // the reader must ignore the marker-less dir and see every staged
-    // row exactly once (a reader that preferred the partial compact=3
-    // would silently drop batches 1..3)
-    assert(DaemonStream.readStaging(spark, s"$dir/staging").count()
-      == pay.count(), "partial compact dir must be invisible to reads")
-    // the next fold lands on the SAME K = 3: the stale partial dir is
-    // deleted before the rewrite and the rewrite commits its marker
-    DaemonStream.compactStaging(spark, s"$dir/staging", 4L, minDirs = 2)
-    assert(new java.io.File(s"$dir/staging/compact=3/_SUCCESS").exists(),
-      "same-K fold must commit a consolidated dir with a marker")
-    val names = new java.io.File(s"$dir/staging").list()
-      .filter(n => n.startsWith("batch=") || n.startsWith("compact="))
-    assert(names.toSet == Set("compact=3"),
-      s"fold collapses the tree to one committed dir: ${names.toSeq}")
-    assert(DaemonStream.readStaging(spark, s"$dir/staging").count()
-      == pay.count(), "post-fold view is complete")
+  }
+
+  test("a two-step state chain launches a pinned number of jobs") {
+    val pay = tables.payments.toDF()
+    val (b0, b1) = (pay.filter(col("ledger_index") % 2 === 0),
+      pay.filter(col("ledger_index") % 2 === 1))
+    def twoSteps(dir: String): Unit = Seq(b0, b1).zipWithIndex.foreach {
+      case (b, id) =>
+        IncrementalDaemon.step(spark, dir, id.toLong,
+          Aggregations.paymentVolumeState(b, "day"))(
+          Aggregations.reducePaymentVolumeState)
+    }
+    twoSteps(Files.createTempDirectory("graft-inc-jobs-warm").toString)
+    val jobs = SparkTest.jobsDuring(
+      twoSteps(Files.createTempDirectory("graft-inc-jobs").toString))
+    assert(jobs === 5, s"two chain steps launched $jobs jobs")
+  }
+
+  test("daemon layout: state/<name>/batch=N with _SUCCESS, and store/<name>") {
+    val dir = Files.createTempDirectory("graft-inc-layout").toString
+    runDaemon(DaemonStream.liveStateDaemon(_, _, _), dir)
+    runDaemon(DaemonStream.statsDaemonIncremental(_, _, _), dir)
+    val names = Set("live_balances", "open_offers", "stats")
+    def ls(p: String) = new java.io.File(p).list().toSet
+    assert(ls(dir) === Set("state", "store"))
+    assert(ls(s"$dir/state") === names)
+    assert(ls(s"$dir/store") === names)
+    for (n <- names) {
+      assert(ls(s"$dir/state/$n") === Set("batch=0", "batch=1"), n)
+      for (b <- Seq("batch=0", "batch=1"))
+        assert(new java.io.File(s"$dir/state/$n/$b/_SUCCESS").isFile, s"$n/$b")
+      assert(new java.io.File(s"$dir/store/$n/_SUCCESS").isFile, n)
+    }
   }
 }

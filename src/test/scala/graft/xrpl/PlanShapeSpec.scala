@@ -45,27 +45,6 @@ class PlanShapeSpec extends AnyFunSuite {
   private def planString(name: String): String =
     collectNodes(planOf(name)).map(_.toString).mkString("\n")
 
-  /** Spark jobs launched while `body` runs, counted by a listener
-    * after a listener-bus drain on both sides.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.GraftListenerBridge.drainListenerBus
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    drainListenerBus(sc, 10000)
-    sc.addSparkListener(listener)
-    try {
-      body
-      drainListenerBus(sc, 10000)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("no unpartitioned window in any relational/time-series gate plan") {
     for (name <- Seq("skyline_orders", "ts_ewma", "ts_rolling_median",
         "w7_rank_distribution", "w8_value_windows", "a_mode_per_user",
@@ -692,7 +671,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "getTransactionByHash" -> Queries.getTransactionByHash(t, tx.tx_hash),
       "getPayments" -> Queries.getPayments(t, Some(Queries.Pair(pay.currency, pay.issuer))))
     requests.foreach { case (name, df) =>
-      val jobs = jobsDuring(assert(df.collect().nonEmpty, s"$name: no rows"))
+      val jobs = SparkTest.jobsDuring(assert(df.collect().nonEmpty, s"$name: no rows"))
       assert(jobs === 1, s"$name: $jobs jobs")
       val exchanges = SparkTest.execNodes(df).collect { case e: Exchange => e.nodeName }
       assert(exchanges.isEmpty, s"$name plans $exchanges")
@@ -767,7 +746,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // DataFrame (six table reads) starts no schema-inference job
     val q9 = SparkEntry.queries("q9_product_profit")
     q9(spark, dir).write.mode("overwrite").format("noop").save()
-    val jobs = jobsDuring(q9(spark, dir))
+    val jobs = SparkTest.jobsDuring(q9(spark, dir))
     assert(jobs == 0, s"building q9_product_profit launched $jobs jobs")
   }
 
@@ -831,7 +810,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val q = SparkEntry.queries("sim_rrf_fusion")
     def run(): Unit = q(spark, dir).write.mode("overwrite").format("noop").save()
     run()
-    val jobs = jobsDuring(run())
+    val jobs = SparkTest.jobsDuring(run())
     assert(jobs <= 18, s"a warm sim_rrf_fusion launched $jobs jobs")
   }
 

@@ -81,4 +81,14 @@ class PrefixSumSpec extends AnyFunSuite {
         col("v").cast(Cols.Dec)))
       assert(actual === expected, s"partitions=$n")
   }
+
+  test("a globalCumsum result joins with itself on its sort keys") {
+    val li = graft.Tables.parquet(spark, "/root/testdata/sf0.001/lineitem.parquet")
+    val keys = Seq("l_orderkey", "l_linenumber")
+    val cum = PrefixSum.globalCumsum(li, keys.map(col),
+      col("l_quantity").cast(Cols.Dec), "cum")
+    val pairs = cum.as("a").join(cum.as("b"), keys)
+      .filter(col("a.cum") === col("b.cum"))
+    assert(pairs.count() === li.count())
+  }
 }

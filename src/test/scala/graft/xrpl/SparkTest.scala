@@ -1,5 +1,9 @@
 package graft.xrpl
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftListenerBridge.drainListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
@@ -28,6 +32,24 @@ object SparkTest {
       case (k, Some(v)) => session.conf.set(k, v)
       case (k, None) => session.conf.unset(k)
     }
+  }
+
+  /** Spark jobs launched while `body` runs, counted by a listener
+    * after a listener-bus drain on both sides.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = session.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    drainListenerBus(sc, 10000)
+    sc.addSparkListener(listener)
+    try {
+      body
+      drainListenerBus(sc, 10000)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Every node of `df`'s executed plan, looking inside adaptive plans

@@ -1,8 +1,6 @@
 package graft.xrpl
 
 import java.nio.file.Files
-import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -46,25 +44,15 @@ class StoreStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-schema").toString
     XrplStore.writeAll(tables, dir)
     XrplStore.writeCandleStore(tables.exchanges.toDF(), dir)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     val reads = XrplStore.layout.keys.toSeq.sorted.map { n =>
       (n, () => XrplStore.read(spark, dir, n), s"$dir/$n")
     } ++ Candles.intervals.map(_._1).map { i =>
       (i, () => XrplStore.readCandles(spark, dir, i), s"$dir/agg_exchanges/interval=$i")
     }
-    sc.addSparkListener(listener)
-    try reads.foreach { case (name, read, path) =>
-      GraftListenerBridge.drainListenerBus(sc, 10000)
-      jobs.set(0)
-      val df = read()
-      GraftListenerBridge.drainListenerBus(sc, 10000)
-      assert(jobs.get === 0, s"$name: jobs started building the read")
-      assert(df.schema === spark.read.parquet(path).schema, name)
-    } finally sc.removeSparkListener(listener)
+    reads.foreach { case (name, read, path) =>
+      assert(SparkTest.jobsDuring(read()) === 0, s"$name: jobs started building the read")
+      assert(read().schema === spark.read.parquet(path).schema, name)
+    }
   }
 
   test("removeLedger: anti-join rewrite removes only that ledger's rows") {
@@ -133,16 +121,8 @@ class StoreStreamSpec extends AnyFunSuite {
     // lists its watched directory recursively
     val dropDir = Files.createTempDirectory("graft-cascade-drop").toString
     val dir = Files.createTempDirectory("graft-cascade-out").toString
-    val src = XrplTables.fixturesPath
-    val raw = spark.read.option("wholetext", "true").text(src)
-      .as[String].collect()
-    val lines = raw.map(s => Json.parse(s).toString)
     // two drop files + maxFilesPerTrigger=1 → two real micro-batches
-    val (first, second) = lines.splitAt(lines.length / 2)
-    Files.write(java.nio.file.Paths.get(s"$dropDir/ledgers_a.jsonl"),
-      first.mkString("\n").getBytes)
-    Files.write(java.nio.file.Paths.get(s"$dropDir/ledgers_b.jsonl"),
-      second.mkString("\n").getBytes)
+    XrplTables.writeFixtureDrops(spark, dropDir)
 
     val stream = spark.readStream
       .schema("value STRING").option("maxFilesPerTrigger", "1").text(dropDir)
